@@ -257,6 +257,23 @@ _rot = [ROTATION_POOL[(ROUND * 8 + i) % len(ROTATION_POOL)]
 HEADLINE = CORE + _rot
 
 
+def _is_descendant(pid: int, root: int) -> bool:
+    """True when ``root`` is ``pid`` or one of its procfs ancestors.  The
+    walk stops at pid 1, after 64 hops (cycle guard) or at the first
+    process that has exited."""
+    seen = 0
+    while pid > 1 and seen < 64:
+        if pid == root:
+            return True
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                pid = int(f.read().split(")")[-1].split()[1])
+        except (OSError, ValueError, IndexError):
+            return False
+        seen += 1
+    return False
+
+
 def _box_load() -> dict:
     """Self-describing box-load stamp (VERDICT r11 #8): 1/5/15-min
     loadavg plus a census of BUSY foreign processes — ANY cmdline, not
@@ -276,22 +293,6 @@ def _box_load() -> dict:
     except (OSError, ValueError):
         pass
     me = os.getpid()
-
-    def _ppid(pid: int) -> int:
-        with open(f"/proc/{pid}/stat") as f:
-            return int(f.read().split(")")[-1].split()[1])
-
-    def _is_descendant(pid: int) -> bool:
-        seen = 0
-        while pid > 1 and seen < 64:
-            if pid == me:
-                return True
-            try:
-                pid = _ppid(pid)
-            except OSError:
-                return False
-            seen += 1
-        return False
 
     def _jiffies() -> dict[int, int]:
         j: dict[int, int] = {}
@@ -317,7 +318,7 @@ def _box_load() -> dict:
             if t0 is None or pid == me:
                 continue
             frac = (t1 - t0) / (0.25 * clk)
-            if frac > 0.5 and not _is_descendant(pid):
+            if frac > 0.5 and not _is_descendant(pid, me):
                 try:
                     with open(f"/proc/{pid}/cmdline", "rb") as f:
                         cmd = (
@@ -353,23 +354,6 @@ def _other_spark_jvms() -> int:
     runs — walk each candidate's ancestor chain up to pid 1 instead).
     Best-effort — any procfs error counts zero."""
     me = os.getpid()
-
-    def _ppid(pid: int) -> int:
-        with open(f"/proc/{pid}/stat") as f:
-            return int(f.read().split(")")[-1].split()[1])
-
-    def _is_descendant(pid: int) -> bool:
-        seen = 0
-        while pid > 1 and seen < 64:  # cycle/typo guard
-            if pid == me:
-                return True
-            try:
-                pid = _ppid(pid)
-            except OSError:
-                return False
-            seen += 1
-        return False
-
     n = 0
     try:
         for pid in os.listdir("/proc"):
@@ -380,7 +364,7 @@ def _other_spark_jvms() -> int:
                     cmd = f.read().replace(b"\0", b" ")
                 if b"java" not in cmd or b"spark" not in cmd.lower():
                     continue
-                if not _is_descendant(int(pid)):
+                if not _is_descendant(int(pid), me):
                     n += 1
             except OSError:
                 continue

@@ -75,11 +75,11 @@ def boosted_stumps(
         F.col(x2_col).cast("double").alias("x2"),
         F.col(y_col).cast("bigint").alias("y"),
     )
-    from .cache import persist_tracked as _pt
-
-    # 1-row frame, but each broadcast reference re-scans the corpus to
-    # recompute it (it appears in the cell-table lineage AND the final
-    # output row) — persist so the min/max pass runs once.
+    # 1-row frame read twice (the cell-table lineage and the final output
+    # row), deliberately NOT persisted: the round-12 persist measured
+    # 5.10 s vs 4.81 s without it in a round-13 in-bench A/B on q369 — the
+    # extra persist job costs more than the cheap columnar min/max re-scan
+    # it saves (OPTIMIZATION_r13.md §2).
     bounds = f.agg(
         F.min("x1").alias("lo1"),
         F.max("x1").alias("hi1"),

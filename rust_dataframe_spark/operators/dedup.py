@@ -923,6 +923,13 @@ def dup_clusters_star(
             break
         prev_sig = sig
         edges = new_edges
+    else:
+        # an edge set that is not yet all stars would label each node with
+        # a local minimum, not its component's: refuse rather than return it
+        raise RuntimeError(
+            f"dup_clusters_star did not converge in {max_iter} rounds — "
+            "raise max_iter"
+        )
     # fixed point: star edges (node -> component_min); roots label themselves
     labels = (
         edges.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))

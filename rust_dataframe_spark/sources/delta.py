@@ -64,8 +64,8 @@ from .lakehouse_util import (
     attach_file_values,
     parse_conjuncts,
     range_survives,
-    tagged_rows,
-    write_rows_hive_tmp,
+    fast_schema,
+    write_hive_tmp,
 )
 
 __all__ = [
@@ -920,7 +920,7 @@ def _commit0_meta(spark: SparkSession, path: str) -> dict:
     return meta
 
 
-def _file_stats(path: str, fallback_count: int | None) -> dict:
+def _file_stats(path: str) -> dict:
     """Per-file add-action stats (PROTOCOL.md 'Per-file Statistics'):
     numRecords from the parquet footer plus minValues/maxValues per
     column from the row-group statistics — footer-only, no data read.
@@ -954,8 +954,7 @@ def _file_stats(path: str, fallback_count: int | None) -> dict:
             stats["minValues"] = mins
             stats["maxValues"] = maxs
     except Exception:
-        if fallback_count is not None:
-            stats = {"numRecords": fallback_count}
+        pass  # unreadable footer: no stats (data skipping is advisory)
     return stats
 
 
@@ -1153,8 +1152,8 @@ def write_delta_commit(
             phys_of = {v: k for k, v in mapping.items()}
         if cm_mode == "id":
             ids_of = _ids_by_logical(meta0)
-    # ONE distributed write (hive layout via partitionBy) + ONE count
-    # job per commit — not a job per partition
+    # ONE write (hive layout via partitionBy) per commit — not a job
+    # per partition
     phys = [phys_of.get(c, c) for c in partition_by]
     out_df = df
     if phys_of:
@@ -1182,100 +1181,14 @@ def write_delta_commit(
                   for c in df.columns]
             )
     tmp = os.path.join(path, f"_tmp_commit_{uuid.uuid4().hex[:8]}")
-    # Driver-side fast path for one-slice local fixture frames (guide
-    # §5): write the SAME hive layout into tmp via pyarrow — no Spark
-    # job.  Row values are untouched by the physical rename, so the
-    # tagged rows ARE the file contents; only names (and id-mode field
-    # ids) differ.  Equivalence pinned in tests/test_r13_opt.py; every
-    # non-provable case falls back to the Spark job below.
-    _local = tagged_rows(df)
-    _wrote_fast = False
-    if _local is not None:
-        from pyspark.sql.types import StructType as _St
-
-        _cols = list(df.columns)
-        _pidx = [_cols.index(c) for c in partition_by]
-        _didx = [i for i, c in enumerate(_cols) if c not in partition_by]
-        _data_fields = [df.schema.fields[i] for i in _didx]
-        _data_schema = _St([
-            type(f)(phys_of.get(f.name, f.name), f.dataType, True)
-            for f in _data_fields
-        ])
-        _fids = (
-            {phys_of.get(c, c): ids_of[c]
-             for c in _cols if c not in partition_by}
-            if cm_mode == "id" else None
-        )
-        _wrote_fast = write_rows_hive_tmp(
-            [tuple(r[i] for i in _didx) for r in _local],
-            _data_schema,
-            tmp,
-            phys,
-            [tuple(r[i] for i in _pidx) for r in _local]
-            if partition_by else None,
-            field_ids=_fids,
-        )
-    if not _wrote_fast:
-        writer = out_df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*phys)
-        writer.parquet(tmp)
-    # Per-commit stats come from the parquet FOOTERS (_file_stats —
-    # numRecords + min/max, footer-only) and the written partition set
-    # from the tmp directory layout, so no second Spark job re-executes
-    # ``df`` (guide §1.2: don't compute things you throw away — the old
-    # groupBy/count job re-ran the entire input plan, which for
-    # compaction-shaped callers is the whole table rewrite twice).
-    # Only a pyarrow-less runtime still pays the count job (fallback).
-    try:
-        import pyarrow.parquet  # noqa: F401
-
-        _have_pa = True
-    except Exception:
-        _have_pa = False
-    if not _have_pa:
-        if partition_by:
-            counts = {
-                tuple(str(r[c]) for c in partition_by): r["cnt"]
-                for r in df.groupBy(*partition_by).agg(
-                    F.count(F.lit(1)).alias("cnt")
-                ).collect()
-            }
-        else:
-            counts = {(): df.count()}
-    else:
-        counts = {}
-    # Spark Hive-escapes special chars in partition dir names
-    # ('%' -> '%25', ':' -> '%3A', ...); discover the on-disk dirs and
-    # map them back to values instead of predicting the escaping.  The
-    # discovered dirs also ARE the written partition set (a partition
-    # value with zero rows writes no dir), replacing the old
-    # groupBy-count probe job.
-    dir_of: dict[tuple, str] = {(): ""}
-    if partition_by:
-        dir_of = {}
-        for root, dirs, _files in os.walk(tmp):
-            rel = os.path.relpath(root, tmp)
-            segs = [] if rel == "." else rel.split(os.sep)
-            if len(segs) == len(phys) and all(
-                "=" in s for s in segs
-            ):
-                if any(
-                    s.split("=", 1)[1] == "__HIVE_DEFAULT_PARTITION__"
-                    for s in segs
-                ):
-                    raise DeltaError(
-                        "writer: null partition value (fail-loud)"
-                    )
-                vals = tuple(
-                    urllib.parse.unquote(s.split("=", 1)[1])
-                    for s in segs
-                )
-                dir_of[vals] = "/".join(segs)
-                dirs[:] = []
+    # Row values are untouched by the physical rename, so a tagged
+    # local frame's rows ARE out_df's rows.  Per-commit stats come from
+    # the parquet FOOTERS (_file_stats) and the written partition set
+    # from the tmp layout, so no second Spark job re-executes ``df``
+    # (guide §1.2: for compaction-shaped callers that would be the
+    # whole table rewrite twice).
+    dir_of = write_hive_tmp(out_df, tmp, phys, df, err_cls=DeltaError)
     parts = sorted(dir_of)
-    if counts and set(counts) != set(parts):
-        raise DeltaError("writer: partition dir/count mismatch")
     if replace_partitions and version > 0:
         _, adds = delta_snapshot_files(spark, path)
         doomed = set(parts)
@@ -1319,10 +1232,9 @@ def write_delta_commit(
                 "modificationTime": ts,
                 "dataChange": True,
             }
-            add["stats"] = json.dumps(_file_stats(
-                os.path.join(full_dir, fname),
-                counts.get(pt) if len(files) == 1 else None,
-            ))
+            add["stats"] = json.dumps(
+                _file_stats(os.path.join(full_dir, fname))
+            )
             actions.append({"add": add})
     shutil.rmtree(tmp, ignore_errors=True)
     if txn is not None:
@@ -1995,20 +1907,13 @@ def _cdf_rewrite_local(
     so expression semantics (null conditions, casts) are identical to
     the distributed path — then pyarrow writes the rewritten table
     file and the cdc file.  Returns False (caller runs the original
-    two-write-job path) when pyarrow or a type falls outside the
-    pinned whitelist."""
-    from .lakehouse_util import _FAST_DATA_TYPES
-
-    for f in snap.schema.fields:
-        if f.dataType.typeName() not in _FAST_DATA_TYPES:
-            return False
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StringType, StructField, StructType
-    except Exception:
+    two-write-job path) when a type falls outside the pinned set."""
+    if not fast_schema(snap.schema):
         return False
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StringType
     cols = snap.columns
     probe_cols = [F.col(f"`{c}`") for c in cols]
     # __m mirrors filter(condition): TRUE only; __nm mirrors
@@ -2409,6 +2314,12 @@ def _compact_group_local(
     feeds the distributed anti-join), concatenate, write one snappy
     parquet.  Returns the output size, or None (caller runs the
     distributed rewrite) above the byte gate or on schema drift."""
+    if dv_of:
+        # DV positions are keyed by basename below, as in the
+        # distributed anti-join
+        assert_unique_basenames(
+            files, err_cls=DeltaError, tag="delta-optimize"
+        )
     try:
         if sum(os.path.getsize(f) for f in files) > _CP_DRIVER_BYTES:
             return None

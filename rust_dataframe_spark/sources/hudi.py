@@ -50,15 +50,14 @@ import json
 import os
 import re
 import time
-import urllib.parse
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .lakehouse_util import (
     attach_file_values,
-    tagged_rows,
-    write_rows_hive_tmp,
+    fast_rows,
+    write_hive_tmp,
 )
 
 __all__ = [
@@ -343,89 +342,28 @@ def write_hudi_commit(
                 F.lit(str(ts)).alias("_hoodie_commit_time"),
                 *[F.col(f"`{c}`") for c in df.columns],
             )
-    # Driver-side fast path for one-slice local fixture frames (guide
-    # §5; same discipline as the Delta/Iceberg writers): the tagged
-    # rows ARE the file contents, with the meta-field prepend/coalesce
-    # replicated value-for-value.  Equivalence pinned in
-    # tests/test_r13_opt.py; non-provable cases fall back to the Spark
-    # job below.
-    _local = tagged_rows(df)
-    _wrote_fast = False
-    if _local is not None:
-        from pyspark.sql.types import StringType as _StrT
-        from pyspark.sql.types import StructField as _Sf
-        from pyspark.sql.types import StructType as _St
 
-        _cols = list(df.columns)
-        _fields = list(df.schema.fields)
-        _rows = [tuple(r) for r in _local]
-        if meta_fields:
-            if "_hoodie_commit_time" in _cols:
-                _hidx = _cols.index("_hoodie_commit_time")
-                _rows = [
-                    tuple(
-                        (v if v is not None else str(ts))
-                        if i == _hidx else v
-                        for i, v in enumerate(r)
-                    )
-                    for r in _rows
-                ]
-            else:
-                _cols = ["_hoodie_commit_time"] + _cols
-                _fields = [
-                    _Sf("_hoodie_commit_time", _StrT(), True)
-                ] + _fields
-                _rows = [(str(ts),) + r for r in _rows]
-        _pidx = [_cols.index(c) for c in partition_by]
-        _didx = [
-            i for i, c in enumerate(_cols) if c not in partition_by
+    def project(rows):
+        # the meta-field prepend/coalesce above, value for value
+        if not meta_fields:
+            return rows
+        if "_hoodie_commit_time" not in df.columns:
+            return [(str(ts),) + r for r in rows]
+        h = df.columns.index("_hoodie_commit_time")
+        return [
+            r[:h] + (str(ts) if r[h] is None else r[h],) + r[h + 1:]
+            for r in rows
         ]
-        _wrote_fast = write_rows_hive_tmp(
-            [tuple(r[i] for i in _didx) for r in _rows],
-            _St([_fields[i] for i in _didx]),
-            tmp,
-            partition_by,
-            [tuple(r[i] for i in _pidx) for r in _rows]
-            if partition_by else None,
-        )
-    if not _wrote_fast:
-        writer = out_df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-    # Discover the written partition set from the tmp directory layout
-    # instead of a second Spark job: ``df.select(...).distinct()``
-    # re-executed the ENTIRE input plan — for compact_hudi that input
-    # is the full merge-on-read log replay, so the old probe doubled
-    # the cost of every compaction (guide §1.2: don't recompute what
-    # an earlier pass already produced).
-    if partition_by:
-        dir_of: dict[tuple, str] = {}
-        for root, dirs, _files in os.walk(tmp):
-            rel = os.path.relpath(root, tmp)
-            segs = [] if rel == "." else rel.split(os.sep)
-            if len(segs) == len(partition_by) and all(
-                "=" in s for s in segs
-            ):
-                if any(
-                    s.split("=", 1)[1] == "__HIVE_DEFAULT_PARTITION__"
-                    for s in segs
-                ):
-                    raise HudiError(
-                        "writer: null partition value (fail-loud)"
-                    )
-                vals = tuple(
-                    urllib.parse.unquote(s.split("=", 1)[1])
-                    for s in segs
-                )
-                dir_of[vals] = "/".join(segs)
-                dirs[:] = []
-        tuples = sorted(dir_of)
-    else:
-        tuples = [()]
+
+    # The written partition set comes from the tmp layout, not a second
+    # Spark job: for compact_hudi the input is the full merge-on-read
+    # log replay, which a ``distinct()`` probe would run twice.
+    dir_of = write_hive_tmp(
+        out_df, tmp, partition_by, df, err_cls=HudiError,
+        project=project,
+    )
     written: dict[str, list[str]] = {}
-    for pt in tuples:
-        sub = "/".join(f"{c}={v}" for c, v in zip(partition_by, pt))
+    for sub in (dir_of[pt] for pt in sorted(dir_of)):
         src_dir = os.path.join(tmp, sub) if sub else tmp
         files = sorted(
             n for n in os.listdir(src_dir) if n.endswith(".parquet")
@@ -852,12 +790,11 @@ def write_hudi_log_commit(
         from .avro import spark_schema_to_avro
 
         avro_schema = spark_schema_to_avro(updates.schema, "hudi_rec")
-        # tagged one-slice local frames skip the collect() job — the
-        # driver already holds the rows (guide §5)
-        _local = tagged_rows(updates)
-        _names = list(updates.columns)
+        # gated local frames skip the collect() job — the driver
+        # already holds the rows (guide §5)
+        _local = fast_rows(updates, updates.schema)
         _recs = (
-            [dict(zip(_names, r)) for r in _local]
+            [dict(zip(updates.columns, r)) for r in _local]
             if _local is not None
             else [r.asDict(recursive=True) for r in updates.collect()]
         )

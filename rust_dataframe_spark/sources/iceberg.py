@@ -52,7 +52,6 @@ from __future__ import annotations
 import json
 import os
 import time
-import urllib.parse
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -64,8 +63,8 @@ from .lakehouse_util import (
     local_rows_df,
     parse_conjuncts as _parse_conjuncts,
     range_survives as _range_survives,
-    tagged_rows,
-    write_rows_hive_tmp,
+    fast_rows,
+    write_hive_tmp,
 )
 
 __all__ = [
@@ -1891,41 +1890,31 @@ def _transform_column(src: str, t: str, tr: str):
 def _write_orc_local(
     rows: list[tuple], schema, tmp: str, field_ids: dict[str, int],
 ) -> bool:
-    """Driver-side twin of ``write_orc_dir`` for a ONE-SLICE local
-    frame: one ``part-00000.orc`` via the same pyarrow.orc writer,
-    zlib, ``iceberg.id`` field metadata.  Returns False (caller runs
-    the distributed writer) on any conversion the fast path cannot
-    prove equivalent."""
-    if not rows:
-        # the distributed writer emits NO file for an empty partition
-        return False
-    try:
-        import pyarrow as pa
-        from pyarrow import orc as pa_orc
-        from pyspark.sql.pandas.types import to_arrow_schema
+    """Driver-side twin of ``write_orc_dir`` for gated rows
+    (:func:`fast_rows`) of a ONE-SLICE local frame: one
+    ``part-00000.orc`` via the same pyarrow.orc writer, zlib,
+    ``iceberg.id`` field metadata.  Returns False (caller runs the
+    distributed writer) when a value does not convert."""
+    import pyarrow as pa
+    from pyarrow import orc as pa_orc
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-        arrow_schema = to_arrow_schema(schema)
-        fields = []
-        for f in arrow_schema:
-            if f.name not in field_ids:
-                return False
-            fields.append(f.with_metadata(
-                {b"iceberg.id": str(field_ids[f.name]).encode()}
-            ))
-        arrow_schema = pa.schema(fields)
-        cols = [
-            pa.array([r[i] for r in rows], type=arrow_schema.types[i])
-            for i in range(len(fields))
-        ]
-        tbl = pa.Table.from_arrays(cols, schema=arrow_schema)
-        os.makedirs(tmp, exist_ok=True)
-        pa_orc.write_table(
-            tbl, os.path.join(tmp, "part-00000.orc"),
-            compression="ZLIB",
-        )
-        return True
-    except Exception:
+    arrow_schema = pa.schema([
+        f.with_metadata({b"iceberg.id": str(field_ids[f.name]).encode()})
+        for f in to_arrow_schema(schema)
+    ])
+    try:
+        tbl = pa.Table.from_arrays([
+            pa.array([r[i] for r in rows], type=t)
+            for i, t in enumerate(arrow_schema.types)
+        ], schema=arrow_schema)
+    except (pa.ArrowException, TypeError, ValueError, OverflowError):
         return False
+    os.makedirs(tmp, exist_ok=True)
+    pa_orc.write_table(
+        tbl, os.path.join(tmp, "part-00000.orc"), compression="ZLIB",
+    )
+    return True
 
 
 def _iceberg_local_transform_vals(
@@ -1935,7 +1924,7 @@ def _iceberg_local_transform_vals(
     """Per-row partition tuples for a TRANSFORMED spec, computed
     driver-side over local fixture rows — the same spec kernels
     (:func:`iceberg_bucket`, :func:`iceberg_truncate`, day-from-epoch)
-    the distributed ``_transform_column`` path applies.  Returns False
+    the distributed ``_transform_column`` path applies.  Returns None
     (caller falls back to the Spark job) for any transform/type pair
     outside the pinned set or a null source value."""
     from datetime import date as _date
@@ -1947,7 +1936,7 @@ def _iceberg_local_transform_vals(
         for _name, src, t, tr in parts_meta:
             v = r[idx[src]]
             if v is None:
-                return False
+                return None
             try:
                 if tr.startswith("bucket[") and tr.endswith("]"):
                     pv.append(
@@ -1963,9 +1952,9 @@ def _iceberg_local_transform_vals(
                         v = _date(y, m, d)
                     pv.append((v - _date(1970, 1, 1)).days)
                 else:
-                    return False
+                    return None
             except (IcebergError, ValueError, TypeError):
-                return False
+                return None
         out.append(tuple(pv))
     return out
 
@@ -2173,6 +2162,7 @@ def write_iceberg_commit(
         write_cols = [f"__pt_{name}" for name, _s, _t, _tr in parts_meta]
         for (name, src, t, tr), wc in zip(parts_meta, write_cols):
             out_df = out_df.withColumn(wc, _transform_column(src, t, tr))
+    dir_of: dict[tuple, str] = {(): ""}  # avro / orc: unpartitioned
     if file_format == "avro":
         # field-id-stamped Avro containers, one per Spark partition
         # (executor-side encode — rows never route through the driver)
@@ -2213,12 +2203,12 @@ def write_iceberg_commit(
                     names=["n_rows"],
                 )
 
-        # tagged one-slice local frames encode driver-side — the SAME
+        # gated local frames encode driver-side — the SAME
         # encode_records codec, one part-00000.avro, no Spark job
         # (guide §5); otherwise the write job's own per-task row
         # counts replace the old separate df.count() job
-        _local = tagged_rows(df)
-        if _local:  # empty -> distributed path (which writes no file)
+        _local = fast_rows(df, df.schema)
+        if _local is not None:
             _recs = [dict(zip(cols_order, r)) for r in _local]
             with open(
                 os.path.join(tmp, "part-00000.avro"), "wb"
@@ -2235,17 +2225,14 @@ def write_iceberg_commit(
     elif file_format == "orc":
         # field-id-stamped ORC files via pyarrow.orc, one per Spark
         # partition (executor-side encode; iceberg.id type attributes
-        # are the spec's ORC field-id carrier).  Tagged one-slice
-        # local frames write their single part file driver-side —
-        # same pyarrow.orc writer, same naming, no Spark job.
-        _local = tagged_rows(df)
-        _wrote_orc = False
-        if _local is not None:
-            _wrote_orc = _write_orc_local(
-                _local, df.schema, tmp,
-                {c: int(name_to_id[c]) for c in df.columns},
-            )
-        if not _wrote_orc:
+        # are the spec's ORC field-id carrier).  Gated local frames
+        # write their single part file driver-side — same pyarrow.orc
+        # writer, same naming, no Spark job.
+        _local = fast_rows(df, df.schema)
+        if _local is None or not _write_orc_local(
+            _local, df.schema, tmp,
+            {c: int(name_to_id[c]) for c in df.columns},
+        ):
             from .orc import write_orc_dir as _worc
 
             _worc(
@@ -2255,93 +2242,31 @@ def write_iceberg_commit(
                 },
             )
     else:
-        # Driver-side fast path for one-slice local fixture frames
-        # (guide §5; same discipline as the Delta writer and the
-        # checkpoint fast path): the tagged rows ARE the file contents
-        # — with_field_ids only changes metadata, and transform values
-        # are recomputed through the SAME spec-pinned Python kernels
-        # (iceberg_bucket / iceberg_truncate, murmur3 test vectors in
+        # with_field_ids changes only metadata, so a local frame's rows
+        # are out_df's rows plus the transform values, recomputed
+        # through the SAME spec-pinned Python kernels (iceberg_bucket /
+        # iceberg_truncate, murmur3 test vectors in
         # tests/test_r12_lakehouse.py) the pandas-UDF path vectorizes.
-        # Equivalence pinned in tests/test_r13_opt.py; any non-provable
-        # case falls back to the Spark job below.
-        _local = tagged_rows(df)
-        _wrote_fast = False
-        if _local is not None:
-            _cols = list(df.columns)
-            if trans:
-                _didx = list(range(len(_cols)))
-                _pv = _iceberg_local_transform_vals(
-                    _local, _cols, parts_meta
-                )
-            else:
-                _pidx = [_cols.index(c) for c in partition_by]
-                _didx = [
-                    i for i, c in enumerate(_cols)
-                    if c not in partition_by
-                ]
-                _pv = (
-                    [tuple(r[i] for i in _pidx) for r in _local]
-                    if partition_by else None
-                )
-            if _pv is not False:
-                from pyspark.sql.types import StructType as _St
+        def project(rows):
+            if not trans:
+                return rows
+            pv = _iceberg_local_transform_vals(
+                rows, list(df.columns), parts_meta
+            )
+            return None if pv is None else [
+                r + p for r, p in zip(rows, pv)
+            ]
 
-                _data_schema = _St(
-                    [df.schema.fields[i] for i in _didx]
-                )
-                _fids = (
-                    {c: int(name_to_id[c])
-                     for c in (_cols[i] for i in _didx)}
-                    if stamp_field_ids else None
-                )
-                _wrote_fast = write_rows_hive_tmp(
-                    [tuple(r[i] for i in _didx) for r in _local],
-                    _data_schema,
-                    tmp,
-                    write_cols,
-                    _pv,
-                    field_ids=_fids,
-                )
-        if not _wrote_fast:
-            writer = out_df.write.mode("overwrite")
-            if write_cols:
-                writer = writer.partitionBy(*write_cols)
-            writer.parquet(tmp)
-    # Written partition set from the tmp directory layout; per-file
-    # row counts from footers at entry-build time — no second Spark
-    # job re-executes ``df`` (guide §1.2; for transformed specs the
-    # old groupBy probe re-ran the bucket pandas UDF over the whole
-    # input a second time).  A null partition/transform value shows
-    # up as Spark's __HIVE_DEFAULT_PARTITION__ dir and refuses loudly
-    # exactly as the old row-probe did.
-    if partition_by or trans:
-        dir_cols = write_cols if trans else partition_by
-        dir_of: dict[tuple, str] = {}
-        for root, dirs, _files in os.walk(tmp):
-            rel = os.path.relpath(root, tmp)
-            segs = [] if rel == "." else rel.split(os.sep)
-            if len(segs) == len(dir_cols) and all(
-                "=" in s for s in segs
-            ):
-                if any(
-                    s.split("=", 1)[1] == "__HIVE_DEFAULT_PARTITION__"
-                    for s in segs
-                ):
-                    raise IcebergError(
-                        "writer: null partition"
-                        + ("-transform" if trans else "")
-                        + " value (fail-loud; null partitions "
-                        "unsupported)"
-                    )
-                vals = tuple(
-                    urllib.parse.unquote(s.split("=", 1)[1])
-                    for s in segs
-                )
-                dir_of[vals] = "/".join(segs)
-                dirs[:] = []
-        tuples = sorted(dir_of)
-    else:
-        tuples = [()]
+        # Written partition set from the tmp directory layout; per-file
+        # row counts from footers at entry-build time — no second Spark
+        # job re-executes ``df`` (guide §1.2; for transformed specs a
+        # groupBy probe re-ran the bucket pandas UDF over the whole
+        # input a second time).
+        dir_of = write_hive_tmp(
+            out_df, tmp, write_cols, df, err_cls=IcebergError,
+            project=project,
+        )
+    tuples = sorted(dir_of)
     counts: dict[tuple, int] = (
         {(): avro_total} if file_format == "avro" else {}
     )
@@ -2364,8 +2289,7 @@ def write_iceberg_commit(
     dst_names = [name for name, _s, _t, _tr in parts_meta]
     ext = {"avro": "avro", "orc": "orc"}.get(file_format, "parquet")
     for pt in tuples:
-        sub = "/".join(f"{c}={v}" for c, v in zip(write_cols, pt))
-        src_dir = os.path.join(tmp, sub) if sub else tmp
+        src_dir = os.path.join(tmp, dir_of[pt]) if pt else tmp
         files = sorted(
             n for n in os.listdir(src_dir) if n.endswith("." + ext)
         )
@@ -2516,35 +2440,22 @@ def write_iceberg_position_deletes(
     from .fieldid import with_field_ids
 
     tmp = os.path.join(path, f"_tmp_del_{uuid.uuid4().hex[:8]}")
-    # The delete set is a driver-local list — write its parquet
-    # driver-side (pyarrow, spec-reserved field ids); no Spark job at
-    # all (guide §5).  Falls back to the one-slice distributed write
-    # when pyarrow is unavailable or the set exceeds the one-slice
-    # equivalence bound.
-    from pyspark.sql.types import StructType as _St
-
+    # The delete set is a driver-local list: gated, its parquet is
+    # written driver-side with no Spark job (guide §5).  The fallback
+    # frame is slice-capped (lakehouse_util.local_rows_df: a plain
+    # createDataFrame evaluated 32 mostly-empty pickled slices
+    # sequentially, ~4.5 s per delete commit, guide §4) and coalesced
+    # to the ONE file this commit registers.
     _del_rows = [(p, int(pos)) for p, pos in deletes]
-    if not write_rows_hive_tmp(
-        _del_rows,
-        _St.fromDDL("file_path string, pos bigint"),
-        tmp, [], None,
-        field_ids={"file_path": 2147483546, "pos": 2147483545},
-    ):
-        # one-slice local frame (lakehouse_util.local_rows_df): the old
-        # createDataFrame(...).coalesce(1) evaluated 32 mostly-empty
-        # pickled slices sequentially in one task — ~4.5 s of Python
-        # worker round-trips per delete commit (guide §4)
-        ddf = local_rows_df(
-            spark, _del_rows, "file_path string, pos bigint",
-        )
+    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    write_hive_tmp(
         # spec-reserved field ids for position-delete files
-        ddf = with_field_ids(
-            ddf, {"file_path": 2147483546, "pos": 2147483545}
-        )
-        spark.conf.set(
-            "spark.sql.parquet.fieldId.write.enabled", "true"
-        )
-        ddf.write.mode("overwrite").parquet(tmp)
+        with_field_ids(
+            local_rows_df(spark, _del_rows, "file_path string, pos bigint"),
+            {"file_path": 2147483546, "pos": 2147483545},
+        ).coalesce(1),
+        tmp, [], _del_rows, err_cls=IcebergError,
+    )
     data_dir = os.path.join(path, "data")
     os.makedirs(data_dir, exist_ok=True)
     part = next(
@@ -2653,31 +2564,16 @@ def write_iceberg_equality_deletes(
     from .fieldid import with_field_ids
 
     tmp = os.path.join(path, f"_tmp_eqdel_{uuid.uuid4().hex[:8]}")
-    # Driver-side fast path when ``values`` is a tagged one-slice local
-    # frame: project the equality columns from the local rows and write
-    # via pyarrow — no Spark job (guide §5).
-    _local = tagged_rows(values)
-    _wrote_fast = False
-    if _local is not None:
-        from pyspark.sql.types import StructType as _St
-
-        _vcols = list(values.columns)
-        _eidx = [_vcols.index(c) for c in equality_cols]
-        _wrote_fast = write_rows_hive_tmp(
-            [tuple(r[i] for i in _eidx) for r in _local],
-            _St([values.schema.fields[i] for i in _eidx]),
-            tmp, [], None,
-            field_ids={
-                c: int(name_to_id[c]) for c in equality_cols
-            },
-        )
-    if not _wrote_fast:
-        spark.conf.set(
-            "spark.sql.parquet.fieldId.write.enabled", "true"
-        )
-        with_field_ids(
-            values.select(*equality_cols), name_to_id
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
+    # A gated local ``values`` frame has its equality columns projected
+    # from the driver rows and written via pyarrow — no Spark job
+    # (guide §5).
+    eq_df = with_field_ids(values.select(*equality_cols), name_to_id)
+    _eidx = [values.columns.index(c) for c in equality_cols]
+    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    write_hive_tmp(
+        eq_df.coalesce(1), tmp, [], values, err_cls=IcebergError,
+        project=lambda rows: [tuple(r[i] for i in _eidx) for r in rows],
+    )
     data_dir = os.path.join(path, "data")
     os.makedirs(data_dir, exist_ok=True)
     part = next(

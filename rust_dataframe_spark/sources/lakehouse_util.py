@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 import re
+import urllib.parse
 import uuid
 
 from pyspark.sql import DataFrame, functions as F
@@ -144,110 +145,158 @@ def tagged_rows(df: DataFrame) -> list[tuple] | None:
 
 
 # Types for which the pyarrow fast path is pinned byte-equivalent to
-# Spark's parquet writer (tests/test_r13_opt.py: same read-back schema,
-# same footer row counts and min/max stats, same file census).  Anything
+# Spark's writers (tests/test_lakehouse_gate.py: same read-back values,
+# same footer min/max stats, same file census).  All flat; anything
 # else falls back to the Spark write job.
 _FAST_DATA_TYPES = {
     "integer", "long", "string", "double", "float", "boolean", "date",
     "short", "byte",
 }
 # Partition-dir values additionally must render to the same directory
-# string Spark produces; pinned for int-family, string and date.
+# string Spark produces: str() of a bool or a float does not ('True'
+# vs 'true', '0.0002' vs '2.0E-4').
 _FAST_PART_TYPES = {"integer", "long", "string", "date", "short", "byte"}
 # Characters Spark/Hive never escape in a partition dir name.  Anything
 # outside (including '%', so unquote() round-trips) falls back.
 _SAFE_PART_RE = re.compile(r"^[A-Za-z0-9._+-]+$")
+_FIELD_ID = "parquet.field.id"
 
 
-def write_rows_hive_tmp(
-    rows: list[tuple],
-    data_schema,
+def fast_schema(schema, part_cols=()) -> bool:
+    """True when every column of ``schema`` has a pinned driver-side
+    twin: partition columns in ``_FAST_PART_TYPES``, the rest in
+    ``_FAST_DATA_TYPES``."""
+    return all(
+        f.dataType.typeName() in (
+            _FAST_PART_TYPES if f.name in part_cols else _FAST_DATA_TYPES
+        )
+        for f in schema.fields
+    )
+
+
+def fast_rows(src, schema, part_cols=(), project=None):
+    """The ONE eligibility gate of every driver-side (pyarrow) write.
+
+    ``src`` is a :func:`local_rows_df` frame (its tag is read; any
+    other DataFrame declines) or a driver-local row list; ``schema``
+    is the schema of the frame Spark would write, ``part_cols`` its
+    partitionBy columns.  ``project`` maps the source rows to rows of
+    ``schema`` (a writer's own renames, prepends or derived values) or
+    returns None to decline.  Returns the projected rows when a
+    driver-side write provably leaves the files Spark's writer would,
+    else None: empty input, more than 4096 rows (a multi-slice frame
+    writes one file per slice per value), a type outside the pinned
+    sets, data columns only partly carrying ``parquet.field.id``, or
+    a partition value that is null (Spark fails loud on it) or would
+    be hive-escaped."""
+    rows = tagged_rows(src) if isinstance(src, DataFrame) else src
+    if not rows or len(rows) > 4096 or not fast_schema(schema, part_cols):
+        return None
+    stamped = {
+        _FIELD_ID in f.metadata
+        for f in schema.fields if f.name not in part_cols
+    }
+    if len(stamped) > 1:
+        return None
+    if project is not None:
+        rows = project(rows)
+        if rows is None:
+            return None
+    pidx = [schema.names.index(c) for c in part_cols]
+    for r in rows:
+        for i in pidx:
+            if r[i] is None or not _SAFE_PART_RE.match(str(r[i])):
+                return None
+    return rows
+
+
+def write_hive_tmp(
+    out_df: DataFrame,
     tmp: str,
-    part_names: list[str],
-    part_vals: list[tuple] | None,
+    part_cols: list[str],
+    src,
     *,
-    field_ids: dict[str, int] | None = None,
-) -> bool:
-    """Driver-side twin of ``df.write.mode('overwrite')
-    .partitionBy(*cols).parquet(tmp)`` for ONE-SLICE local-rows frames
-    (guide §5: the driver should do almost no data work — and a
-    distributed write job over a driver-local fixture list is exactly
-    that work, ~0.25-0.4 s of scheduling per tiny commit).
+    err_cls: type[Exception],
+    project=None,
+) -> dict[tuple, str]:
+    """``out_df.write.mode('overwrite').partitionBy(*part_cols)
+    .parquet(tmp)``, done driver-side with pyarrow when
+    :func:`fast_rows` admits ``src`` and ``project`` (guide §5: a
+    distributed write job over a driver-local fixture list costs
+    ~0.25-0.4 s of scheduling per tiny commit).  The driver-side write leaves the SAME layout:
+    hive dirs ``k=v``, ONE part file per partition value in input
+    order (a one-slice frame is a one-task write), every column
+    nullable, snappy, footer min/max on, ``parquet.field.id`` metadata
+    stamped as ``PARQUET:field_id``.
 
-    Produces the SAME tmp layout the Spark job would: hive partition
-    dirs ``k=v``, ONE part file per partition value (a one-slice frame
-    is a one-task write), parquet schema derived through the same
-    ``to_arrow_schema`` mapping the checkpoint fast path pinned, footer
-    min/max statistics on, optional ``PARQUET:field_id`` stamping.
-    Returns False — caller runs the original Spark job — whenever
-    equivalence is not provable: pyarrow missing, empty input, a type
-    outside the pinned whitelist, or a partition value that is null or
-    would be hive-escaped (chars outside ``_SAFE_PART_RE``).
-
-    ``rows`` are the FILE contents (partition columns already removed,
-    matching partitionBy semantics) in input order; ``part_vals`` the
-    per-row partition tuples aligned with ``rows`` (None ≡ all-empty,
-    unpartitioned)."""
-    if not rows or len(rows) > 4096:
-        # >4096 rows would have been a multi-slice frame: the Spark
-        # job writes one file PER SLICE per value — a different file
-        # census the fast path must not silently change
-        return False
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-    except Exception:
-        return False
-    for f in data_schema.fields:
-        if f.dataType.typeName() not in _FAST_DATA_TYPES:
-            return False
-    if part_names:
-        if part_vals is None or len(part_vals) != len(rows):
-            return False
-        for pv in part_vals:
-            for v in pv:
-                if v is None:
-                    return False  # Spark path fail-louds identically
-                s = str(v)
-                if not _SAFE_PART_RE.match(s):
-                    return False
-    try:
-        arrow_schema = to_arrow_schema(data_schema)
-    except Exception:
-        return False
-    if field_ids is not None:
-        missing = [n for n in arrow_schema.names if n not in field_ids]
-        if missing:
-            return False
-        arrow_schema = pa.schema([
-            f.with_metadata(
-                {b"PARQUET:field_id": str(int(field_ids[f.name])).encode()}
+    Returns ``{partition value tuple: dir relative to tmp}`` read back
+    from the written layout (``{(): ''}`` unpartitioned); values are
+    the unescaped dir strings.  A null partition value raises
+    ``err_cls``."""
+    rows = fast_rows(src, out_df.schema, part_cols, project)
+    if rows is None or not _write_parquet_local(
+        rows, out_df.schema, tmp, part_cols
+    ):
+        writer = out_df.write.mode("overwrite")
+        if part_cols:
+            writer = writer.partitionBy(*part_cols)
+        writer.parquet(tmp)
+    if not part_cols:
+        return {(): ""}
+    # Spark hive-escapes special chars in dir names ('%' -> '%25',
+    # ':' -> '%3A', ...): read the dirs back instead of predicting the
+    # escaping.  A value with zero rows writes no dir, so these ARE the
+    # written partition set.
+    dir_of: dict[tuple, str] = {}
+    for root, dirs, _files in os.walk(tmp):
+        rel = os.path.relpath(root, tmp)
+        segs = [] if rel == "." else rel.split(os.sep)
+        if len(segs) == len(part_cols) and all("=" in s for s in segs):
+            raw = [s.split("=", 1)[1] for s in segs]
+            if "__HIVE_DEFAULT_PARTITION__" in raw:
+                raise err_cls("writer: null partition value (fail-loud)")
+            dir_of[tuple(urllib.parse.unquote(v) for v in raw)] = (
+                "/".join(segs)
             )
-            for f in arrow_schema
-        ])
+            dirs[:] = []
+    return dir_of
+
+
+def _write_parquet_local(rows, schema, tmp, part_cols) -> bool:
+    """pyarrow half of :func:`write_hive_tmp` over gated ``rows``;
+    False (nothing left in ``tmp``) when a value does not convert."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructField, StructType
+
+    pidx = [schema.names.index(c) for c in part_cols]
+    didx = [i for i, c in enumerate(schema.names) if c not in part_cols]
+    fields = [schema.fields[i] for i in didx]
+    arrow_schema = to_arrow_schema(StructType([
+        StructField(f.name, f.dataType, True) for f in fields
+    ]))
+    arrow_schema = pa.schema([
+        af.with_metadata(
+            {b"PARQUET:field_id": str(int(f.metadata[_FIELD_ID])).encode()}
+        ) if _FIELD_ID in f.metadata else af
+        for af, f in zip(arrow_schema, fields)
+    ])
     # stable group by partition tuple: input order within each group is
     # exactly the one-task Spark write's order (positions in the file
     # matter to position-delete fixtures)
     groups: dict[tuple, list[tuple]] = {}
-    if part_names:
-        for r, pv in zip(rows, part_vals):
-            groups.setdefault(tuple(pv), []).append(tuple(r))
-    else:
-        groups[()] = [tuple(r) for r in rows]
-    ncols = len(data_schema.fields)
+    for r in rows:
+        groups.setdefault(tuple(r[i] for i in pidx), []).append(r)
     try:
         for pv, grp in groups.items():
-            sub = "/".join(
-                f"{c}={v}" for c, v in zip(part_names, pv)
-            )
+            sub = "/".join(f"{c}={v}" for c, v in zip(part_cols, pv))
             out_dir = os.path.join(tmp, sub) if sub else tmp
             os.makedirs(out_dir, exist_ok=True)
-            cols = [
-                pa.array([r[i] for r in grp], type=arrow_schema.types[i])
-                for i in range(ncols)
-            ]
-            tbl = pa.Table.from_arrays(cols, schema=arrow_schema)
+            tbl = pa.Table.from_arrays([
+                pa.array([r[i] for r in grp], type=t)
+                for i, t in zip(didx, arrow_schema.types)
+            ], schema=arrow_schema)
             pq.write_table(
                 tbl,
                 os.path.join(
@@ -255,7 +304,7 @@ def write_rows_hive_tmp(
                 ),
                 compression="snappy",
             )
-    except Exception:
+    except (pa.ArrowException, TypeError, ValueError, OverflowError):
         # half-written tmp must not leak into the caller's discovery
         import shutil
 

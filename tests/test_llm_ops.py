@@ -1306,6 +1306,18 @@ class TestStarConnectedComponents:
         with pytest.raises(RuntimeError, match="star"):
             dd.dup_clusters(df, max_iter=5).collect()
 
+    def test_star_refuses_unconverged(self, spark):
+        """One round cannot contract a 60-node chain: the star variant must
+        raise like dup_clusters, not turn the partial edge set into labels."""
+        import pytest
+
+        from rust_dataframe_spark.operators import dedup as dd
+
+        chain = [(i, i + 1) for i in range(60)]
+        df = spark.createDataFrame(chain, "id_a bigint, id_b bigint")
+        with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+            dd.dup_clusters_star(df, max_iter=1)
+
 
 class TestChunkText:
     def test_chunks_overlap_and_tail(self, spark):

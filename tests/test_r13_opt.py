@@ -1,9 +1,10 @@
 """Round-13 optimization pins: the driver-side DATA-FILE fast path
-(``lakehouse_util.write_rows_hive_tmp`` + the per-writer hooks) must be
-equivalent to the Spark write jobs it replaces.
+(``lakehouse_util.fast_rows`` gate + ``write_hive_tmp`` + the
+per-writer projections) must be equivalent to the Spark write jobs it
+replaces.
 
 Covers (OPTIMIZATION_r13.md):
-- ``write_rows_hive_tmp`` vs ``df.write.partitionBy(...).parquet``:
+- ``write_hive_tmp`` vs ``df.write.partitionBy(...).parquet``:
   same hive dir layout, same file census (one file per partition
   value for a one-slice frame), same read-back schema AND values
   through ``spark.read.parquet``, footer min/max statistics present,
@@ -31,9 +32,10 @@ from rust_dataframe_spark.sources import delta as d
 from rust_dataframe_spark.sources import hudi as h
 from rust_dataframe_spark.sources import iceberg as ice
 from rust_dataframe_spark.sources.lakehouse_util import (
+    fast_rows,
     local_rows_df,
     tagged_rows,
-    write_rows_hive_tmp,
+    write_hive_tmp,
 )
 
 
@@ -82,14 +84,14 @@ def test_hive_tmp_matches_spark_partitioned(spark, tmp_path):
     ddl = "id int, name string, x double, p int"
     fast = str(tmp_path / "fast")
     slow = str(tmp_path / "slow")
-    schema = StructType.fromDDL("id int, name string, x double")
-    assert write_rows_hive_tmp(
-        [r[:3] for r in rows], schema, fast, ["p"],
-        [(r[3],) for r in rows],
-    )
-    local_rows_df(spark, rows, ddl).write.mode("overwrite").partitionBy(
-        "p"
-    ).parquet(slow)
+    src = local_rows_df(spark, rows, ddl)
+    assert fast_rows(src, src.schema, ["p"]) == rows
+    dirs = write_hive_tmp(src, fast, ["p"], src, err_cls=ValueError)
+    assert dirs == {("0",): "p=0", ("1",): "p=1", ("2",): "p=2"}
+    slow_df = _untag(local_rows_df(spark, rows, ddl))
+    assert write_hive_tmp(
+        slow_df, slow, ["p"], slow_df, err_cls=ValueError
+    ) == dirs
     # same partition dirs, same one-file-per-value census
     cf = {k: v for k, v in _census(fast).items()}
     cs = {k: v for k, v in _census(slow).items()}
@@ -111,19 +113,18 @@ def test_hive_tmp_matches_spark_partitioned(spark, tmp_path):
 def test_hive_tmp_field_ids_match_spark(spark, tmp_path):
     import pyarrow.parquet as pq
 
-    rows = [(i, i * 2) for i in range(5)]
-    schema = StructType.fromDDL("a int, b long")
-    fast = str(tmp_path / "fast")
-    slow = str(tmp_path / "slow")
-    assert write_rows_hive_tmp(
-        rows, schema, fast, [], None, field_ids={"a": 7, "b": 9}
-    )
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     from rust_dataframe_spark.sources.fieldid import with_field_ids
 
-    with_field_ids(
+    rows = [(i, i * 2) for i in range(5)]
+    fast = str(tmp_path / "fast")
+    slow = str(tmp_path / "slow")
+    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    out = with_field_ids(
         local_rows_df(spark, rows, "a int, b long"), {"a": 7, "b": 9}
-    ).write.mode("overwrite").parquet(slow)
+    )
+    assert fast_rows(rows, out.schema) == rows
+    write_hive_tmp(out, fast, [], rows, err_cls=ValueError)
+    write_hive_tmp(out, slow, [], out, err_cls=ValueError)  # untagged
 
     def ids_of(root):
         f = next(
@@ -138,33 +139,31 @@ def test_hive_tmp_field_ids_match_spark(spark, tmp_path):
     assert ids_of(fast) == ids_of(slow) == {"a": b"7", "b": b"9"}
 
 
-def test_hive_tmp_fallbacks(tmp_path):
+def test_hive_tmp_fallbacks(spark):
     schema = StructType.fromDDL("a int")
+    pschema = StructType.fromDDL("a int, p string")
     # empty input
-    assert not write_rows_hive_tmp([], schema, str(tmp_path / "t1"),
-                                   [], None)
+    assert fast_rows([], schema) is None
     # >4096 rows (would be a multi-slice frame -> different census)
-    assert not write_rows_hive_tmp(
-        [(i,) for i in range(4097)], schema, str(tmp_path / "t2"),
-        [], None,
-    )
+    assert fast_rows([(i,) for i in range(4097)], schema) is None
+    assert fast_rows([(i,) for i in range(4096)], schema) is not None
     # unsupported data type
-    ts = StructType.fromDDL("a timestamp")
-    assert not write_rows_hive_tmp([(None,)], ts, str(tmp_path / "t3"),
-                                   [], None)
+    assert fast_rows([(None,)], StructType.fromDDL("a timestamp")) is None
     # null partition value (Spark path fail-louds; fast path declines)
-    assert not write_rows_hive_tmp(
-        [(1,)], schema, str(tmp_path / "t4"), ["p"], [(None,)],
-    )
+    assert fast_rows([(1, None)], pschema, ["p"]) is None
     # partition value Spark would hive-escape
-    assert not write_rows_hive_tmp(
-        [(1,)], schema, str(tmp_path / "t5"), ["p"], [("a b:c",)],
+    assert fast_rows([(1, "a b:c")], pschema, ["p"]) is None
+    assert fast_rows([(1, "ab")], pschema, ["p"]) == [(1, "ab")]
+    # missing field id: one data column stamped, the other not
+    part_ids = local_rows_df(spark, [(1, 2)], "a int, b int").select(
+        F.col("a").alias("a", metadata={"parquet.field.id": 1}), "b"
     )
-    # missing field id
-    assert not write_rows_hive_tmp(
-        [(1,)], schema, str(tmp_path / "t6"), [], None,
-        field_ids={},
-    )
+    assert fast_rows([(1, 2)], part_ids.schema) is None
+    # an untagged DataFrame or a projection that declines
+    df = local_rows_df(spark, [(1,)], "a int")
+    assert fast_rows(df.select("a"), schema) is None
+    assert fast_rows(df, schema, project=lambda rows: None) is None
+    assert fast_rows(df, schema) == [(1,)]
 
 
 def test_hive_tmp_row_order_preserved(spark, tmp_path):
@@ -172,11 +171,8 @@ def test_hive_tmp_row_order_preserved(spark, tmp_path):
     # deletes: input order within each partition group must survive
     rows = [(i, i % 2) for i in range(10)]
     fast = str(tmp_path / "fast")
-    schema = StructType.fromDDL("id int")
-    assert write_rows_hive_tmp(
-        [(r[0],) for r in rows], schema, fast, ["p"],
-        [(r[1],) for r in rows],
-    )
+    src = local_rows_df(spark, rows, "id int, p int")
+    write_hive_tmp(src, fast, ["p"], src, err_cls=ValueError)
     got = [
         r.id for r in spark.read.parquet(os.path.join(fast, "p=0"))
         .collect()
@@ -475,6 +471,35 @@ def test_compact_local_with_dvs(spark, tmp_path, monkeypatch):
     b = build(str(tmp_path / "sdv"), False)
     assert _canon(a.collect()) == _canon(b.collect())
     assert sorted(r.id for r in a.collect()) == [0, 1, 3, 4, 6, 7, 8, 9]
+
+
+def test_compact_local_refuses_duplicate_basenames(
+    spark, tmp_path, monkeypatch
+):
+    # DV positions are keyed by basename: two live files sharing one
+    # (here a copy in a sub-directory) must fail loud on the local path
+    # exactly as on the distributed one, never apply a DV to both
+    import json as _json
+    import shutil as _shutil
+
+    path = str(tmp_path / "dup")
+    d.write_delta_commit(
+        spark, path, local_rows_df(spark, [(i,) for i in range(6)], "id int")
+    )
+    _m, adds = d.delta_snapshot_files(spark, path)
+    base = adds[0]["path"]
+    os.makedirs(os.path.join(path, "sub"))
+    _shutil.copy(os.path.join(path, base), os.path.join(path, "sub", base))
+    with open(os.path.join(path, "_delta_log", d._commit_name(1)), "w") as fh:
+        fh.write(_json.dumps({"add": {
+            "path": f"sub/{base}", "partitionValues": {},
+            "size": adds[0]["size"], "modificationTime": 1,
+            "dataChange": True,
+        }}) + "\n")
+    d.write_delta_delete_rows(spark, path, {base: [1]})
+    monkeypatch.setattr(d, "_CP_DRIVER_BYTES", 8 << 20)
+    with pytest.raises(d.DeltaError, match="duplicate data-file basename"):
+        d.compact_delta_files(spark, path)
 
 
 def test_tag_semantics(spark):
