@@ -1166,9 +1166,6 @@ def write_delta_commit(
                     f"columns {missing_ids} not in the table schema "
                     "(id-mode writes need a column id per column)"
                 )
-            spark.conf.set(
-                "spark.sql.parquet.fieldId.write.enabled", "true"
-            )
             out_df = df.select(
                 *[F.col(f"`{c}`").alias(
                     phys_of.get(c, c),

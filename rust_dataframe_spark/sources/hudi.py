@@ -57,6 +57,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .lakehouse_util import (
     attach_file_values,
     fast_rows,
+    parse_part_path,
+    part_path,
+    part_value,
     write_hive_tmp,
 )
 
@@ -213,9 +216,7 @@ def hudi_snapshot_files(
 def _partition_cols(files: list[tuple[str, str]]) -> list[str]:
     cols: list[str] | None = None
     for part, _f in files:
-        names = [
-            seg.split("=", 1)[0] for seg in part.split("/") if "=" in seg
-        ] if part else []
+        names = [c for c, _v in parse_part_path(part)]
         if cols is None:
             cols = names
         elif cols != names:
@@ -250,9 +251,7 @@ def read_hudi(
     file_to_vals = []
     extra = ["hudi_fid"] if _mor_base else []
     for part, f in files:
-        vals = dict(
-            seg.split("=", 1) for seg in part.split("/") if "=" in seg
-        )
+        vals = dict(parse_part_path(part))
         row = [vals[c] for c in part_cols]
         if _mor_base:
             row.append(
@@ -362,8 +361,15 @@ def write_hudi_commit(
         out_df, tmp, partition_by, df, err_cls=HudiError,
         project=project,
     )
+    # upsert targets match by unescaped partition values, so the table's
+    # dir name and the one Spark just wrote need not agree on escaping
+    upsert_of = {
+        tuple(v for _c, v in parse_part_path(p)): fid
+        for p, fid in (upsert_into or {}).items()
+    }
     written: dict[str, list[str]] = {}
-    for sub in (dir_of[pt] for pt in sorted(dir_of)):
+    for pt in sorted(dir_of):
+        sub = dir_of[pt]
         src_dir = os.path.join(tmp, sub) if sub else tmp
         files = sorted(
             n for n in os.listdir(src_dir) if n.endswith(".parquet")
@@ -371,7 +377,7 @@ def write_hudi_commit(
         full_dir = os.path.join(path, sub) if sub else path
         os.makedirs(full_dir, exist_ok=True)
         for k, part in enumerate(files):
-            fid = (upsert_into or {}).get(sub) if k == 0 else None
+            fid = upsert_of.get(pt) if k == 0 else None
             if fid is None:
                 fid = str(uuid.uuid5(
                     uuid.NAMESPACE_URL, f"{sub}/{ts}/{k}"
@@ -798,10 +804,19 @@ def write_hudi_log_commit(
             if _local is not None
             else [r.asDict(recursive=True) for r in updates.collect()]
         )
+        # route by VALUE: the dir holds Spark's rendering ('true',
+        # '2.0E-4', escaped), which str() of the row value is not
+        types = [updates.schema[c].dataType for c in part_cols]
+        part_of = {
+            tuple(
+                part_value(v, t)
+                for (_c, v), t in zip(parse_part_path(part), types)
+            ): part
+            for part in group_of
+        }
         for rec in _recs:
-            part = "/".join(
-                f"{c}={rec[c]}" for c in part_cols
-            ) if part_cols else ""
+            pv = tuple(rec[c] for c in part_cols)
+            part = part_of.get(pv, part_path(part_cols, pv))
             per_part.setdefault(part, {"ups": [], "dels": []})[
                 "ups"
             ].append(rec)
@@ -1013,10 +1028,7 @@ def read_hudi_incremental(
     if part_cols:
         file_to_vals = []
         for part, f in cands:
-            vals = dict(
-                seg.split("=", 1) for seg in part.split("/")
-                if "=" in seg
-            )
+            vals = dict(parse_part_path(part))
             file_to_vals.append(
                 (os.path.abspath(f), [vals[c] for c in part_cols])
             )

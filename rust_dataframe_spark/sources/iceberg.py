@@ -55,6 +55,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .avro import decode_records, encode_records
 from .lakehouse_util import (
@@ -64,7 +65,9 @@ from .lakehouse_util import (
     parse_conjuncts as _parse_conjuncts,
     range_survives as _range_survives,
     fast_rows,
+    part_path,
     write_hive_tmp,
+    write_local,
 )
 
 __all__ = [
@@ -2151,7 +2154,6 @@ def write_iceberg_commit(
             "Avro data files REQUIRE field-id attributes (spec); "
             "stamp_field_ids=False is contradictory"
         )
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     tmp = os.path.join(path, f"_tmp_ice_{uuid.uuid4().hex[:8]}")
     out_df = with_field_ids(df, name_to_id) if stamp_field_ids else df
     write_cols = list(partition_by)
@@ -2293,7 +2295,7 @@ def write_iceberg_commit(
         files = sorted(
             n for n in os.listdir(src_dir) if n.endswith("." + ext)
         )
-        dst_sub = "/".join(f"{c}={v}" for c, v in zip(dst_names, pt))
+        dst_sub = part_path(dst_names, pt)
         full_dir = os.path.join(data_dir, dst_sub) if dst_sub else data_dir
         os.makedirs(full_dir, exist_ok=True)
         for k, part in enumerate(files):
@@ -2416,6 +2418,15 @@ def write_iceberg_commit(
     return snapshot_id
 
 
+# the spec's position-delete file columns and their reserved field ids
+_POS_DELETE_SCHEMA = StructType([
+    StructField(
+        "file_path", StringType(), True, {"parquet.field.id": 2147483546}
+    ),
+    StructField("pos", LongType(), True, {"parquet.field.id": 2147483545}),
+])
+
+
 def write_iceberg_position_deletes(
     spark: SparkSession, path: str, deletes: list[tuple[str, int]]
 ) -> int:
@@ -2437,25 +2448,21 @@ def write_iceberg_position_deletes(
     mdir = os.path.join(path, "metadata")
     ts = int(time.time() * 1000)
     snapshot_id = ts * 1000 + version
-    from .fieldid import with_field_ids
 
     tmp = os.path.join(path, f"_tmp_del_{uuid.uuid4().hex[:8]}")
     # The delete set is a driver-local list: gated, its parquet is
-    # written driver-side with no Spark job (guide §5).  The fallback
-    # frame is slice-capped (lakehouse_util.local_rows_df: a plain
-    # createDataFrame evaluated 32 mostly-empty pickled slices
-    # sequentially, ~4.5 s per delete commit, guide §4) and coalesced
-    # to the ONE file this commit registers.
+    # written driver-side with no Spark job and no frame built at all
+    # (guide §5).  Only a declined set becomes a slice-capped frame
+    # (lakehouse_util.local_rows_df: a plain createDataFrame evaluated
+    # 32 mostly-empty pickled slices sequentially, ~4.5 s per delete
+    # commit, guide §4), coalesced to the ONE file this commit
+    # registers.
     _del_rows = [(p, int(pos)) for p, pos in deletes]
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    write_hive_tmp(
-        # spec-reserved field ids for position-delete files
-        with_field_ids(
-            local_rows_df(spark, _del_rows, "file_path string, pos bigint"),
-            {"file_path": 2147483546, "pos": 2147483545},
-        ).coalesce(1),
-        tmp, [], _del_rows, err_cls=IcebergError,
-    )
+    if not write_local(_del_rows, _POS_DELETE_SCHEMA, tmp):
+        write_hive_tmp(
+            local_rows_df(spark, _del_rows, _POS_DELETE_SCHEMA).coalesce(1),
+            tmp, [], None, err_cls=IcebergError,
+        )
     data_dir = os.path.join(path, "data")
     os.makedirs(data_dir, exist_ok=True)
     part = next(
@@ -2542,6 +2549,8 @@ def write_iceberg_equality_deletes(
     Returns the new snapshot id."""
     import shutil
 
+    import pyarrow.parquet as pq
+
     meta, version = _load_metadata(path)
     if meta.get("current-snapshot-id", -1) == -1:
         raise IcebergError("equality deletes need an existing snapshot")
@@ -2569,7 +2578,6 @@ def write_iceberg_equality_deletes(
     # (guide §5).
     eq_df = with_field_ids(values.select(*equality_cols), name_to_id)
     _eidx = [values.columns.index(c) for c in equality_cols]
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     write_hive_tmp(
         eq_df.coalesce(1), tmp, [], values, err_cls=IcebergError,
         project=lambda rows: [tuple(r[i] for i in _eidx) for r in rows],
@@ -2596,7 +2604,9 @@ def write_iceberg_equality_deletes(
             "file_path": final,
             "file_format": "PARQUET",
             "partition": {name: None for name, _s, _t, _tr in parts_meta},
-            "record_count": values.count(),
+            # the delete file holds one row per ``values`` row; its
+            # footer counts them without re-running ``values``
+            "record_count": pq.read_metadata(final).num_rows,
             "file_size_in_bytes": os.path.getsize(final),
             "equality_ids": eq_ids,
             "lower_bounds": None,

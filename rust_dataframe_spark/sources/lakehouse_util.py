@@ -103,7 +103,7 @@ def range_survives(lo, hi, op: str, val) -> bool:
     return True
 
 
-def local_rows_df(spark, rows: list, schema: str):
+def local_rows_df(spark, rows: list, schema):
     """Slice-capped DataFrame from driver-local rows.
 
     ``spark.createDataFrame(rows, ddl)`` parallelizes the list into
@@ -127,7 +127,7 @@ def local_rows_df(spark, rows: list, schema: str):
         # Fast-path tag: the lakehouse writers recognize a one-slice
         # local frame and can write its data file DRIVER-SIDE (pyarrow)
         # instead of launching a Spark write job (~0.25-0.4 s each; see
-        # write_rows_hive_tmp).  The tag lives on this exact DataFrame
+        # write_hive_tmp).  The tag lives on this exact DataFrame
         # object only — any transformation returns an untagged frame,
         # so a derived plan can never be mistaken for driver rows.
         try:
@@ -210,6 +210,69 @@ def fast_rows(src, schema, part_cols=(), project=None):
     return rows
 
 
+# Characters Spark escapes as %XX in a hive partition dir name
+# (ExternalCatalogUtils.escapePathName, POSIX set).
+_HIVE_ESCAPE = frozenset('"#%\'*/:=?\\\x7f{[]^') | frozenset(
+    map(chr, range(1, 32))
+)
+
+
+def part_path(cols, vals) -> str:
+    """Hive partition path ``c1=v1/c2=v2`` of one partition tuple,
+    escaped as Spark escapes dir names.  ``vals`` must already be
+    Spark's string rendering (dir values read back, or gated values
+    whose ``str()`` is that rendering); inverse of
+    :func:`parse_part_path`."""
+    def esc(s) -> str:
+        return "".join(
+            f"%{ord(ch):02X}" if ch in _HIVE_ESCAPE else ch for ch in str(s)
+        )
+
+    return "/".join(f"{esc(c)}={esc(v)}" for c, v in zip(cols, vals))
+
+
+def parse_part_path(rel: str) -> list[tuple[str, str]]:
+    """``[(column, value string)]`` of a hive partition path, both
+    unescaped (``'%'`` itself is escaped, so unquote round-trips)."""
+    return [
+        tuple(urllib.parse.unquote(x) for x in seg.split("=", 1))
+        for seg in rel.split("/") if "=" in seg
+    ] if rel else []
+
+
+def part_value(s: str, dtype):
+    """Python value of a parsed dir value under Spark type ``dtype``:
+    the inverse of Spark's cast to string (``'true'`` -> True,
+    ``'2.0E-4'`` -> 2e-4), so rows match dirs by VALUE, not by a
+    re-rendered string.  None for the hive null dir; a string that
+    does not parse, or of another type (a timestamp dir is rendered in
+    the session time zone, collected rows in the local one), stays a
+    string and matches no typed value."""
+    import datetime as _dt
+    import struct
+    from decimal import Decimal, InvalidOperation
+
+    if s == "__HIVE_DEFAULT_PARTITION__":
+        return None
+    t = dtype.typeName()
+    try:
+        if t == "boolean":
+            return {"true": True, "false": False}.get(s, s)
+        if t in ("integer", "long", "short", "byte"):
+            return int(s)
+        if t == "double":
+            return float(s)
+        if t == "float":  # rows hold the float32 value, widened
+            return struct.unpack("f", struct.pack("f", float(s)))[0]
+        if t == "decimal":
+            return Decimal(s)
+        if t == "date":
+            return _dt.date.fromisoformat(s)
+    except (ValueError, InvalidOperation, OverflowError):
+        pass
+    return s
+
+
 def write_hive_tmp(
     out_df: DataFrame,
     tmp: str,
@@ -220,51 +283,53 @@ def write_hive_tmp(
     project=None,
 ) -> dict[tuple, str]:
     """``out_df.write.mode('overwrite').partitionBy(*part_cols)
-    .parquet(tmp)``, done driver-side with pyarrow when
-    :func:`fast_rows` admits ``src`` and ``project`` (guide §5: a
-    distributed write job over a driver-local fixture list costs
-    ~0.25-0.4 s of scheduling per tiny commit).  The driver-side write leaves the SAME layout:
-    hive dirs ``k=v``, ONE part file per partition value in input
-    order (a one-slice frame is a one-task write), every column
-    nullable, snappy, footer min/max on, ``parquet.field.id`` metadata
-    stamped as ``PARQUET:field_id``.
+    .parquet(tmp)``, done driver-side by :func:`write_local` when the
+    gate admits ``src`` and ``project`` (guide §5: a distributed write
+    job over a driver-local fixture list costs ~0.25-0.4 s of
+    scheduling per tiny commit).
 
     Returns ``{partition value tuple: dir relative to tmp}`` read back
     from the written layout (``{(): ''}`` unpartitioned); values are
     the unescaped dir strings.  A null partition value raises
     ``err_cls``."""
-    rows = fast_rows(src, out_df.schema, part_cols, project)
-    if rows is None or not _write_parquet_local(
-        rows, out_df.schema, tmp, part_cols
-    ):
+    if not write_local(src, out_df.schema, tmp, part_cols, project):
+        if any(_FIELD_ID in f.metadata for f in out_df.schema.fields):
+            out_df.sparkSession.conf.set(
+                "spark.sql.parquet.fieldId.write.enabled", "true"
+            )
         writer = out_df.write.mode("overwrite")
         if part_cols:
             writer = writer.partitionBy(*part_cols)
         writer.parquet(tmp)
     if not part_cols:
         return {(): ""}
-    # Spark hive-escapes special chars in dir names ('%' -> '%25',
-    # ':' -> '%3A', ...): read the dirs back instead of predicting the
-    # escaping.  A value with zero rows writes no dir, so these ARE the
-    # written partition set.
+    # Spark hive-escapes special chars in dir names: read the dirs back
+    # instead of predicting them.  A value with zero rows writes no
+    # dir, so these ARE the written partition set.
     dir_of: dict[tuple, str] = {}
     for root, dirs, _files in os.walk(tmp):
-        rel = os.path.relpath(root, tmp)
-        segs = [] if rel == "." else rel.split(os.sep)
+        rel = os.path.relpath(root, tmp).replace(os.sep, "/")
+        segs = [] if rel == "." else rel.split("/")
         if len(segs) == len(part_cols) and all("=" in s for s in segs):
-            raw = [s.split("=", 1)[1] for s in segs]
-            if "__HIVE_DEFAULT_PARTITION__" in raw:
+            vals = tuple(v for _c, v in parse_part_path(rel))
+            if "__HIVE_DEFAULT_PARTITION__" in vals:
                 raise err_cls("writer: null partition value (fail-loud)")
-            dir_of[tuple(urllib.parse.unquote(v) for v in raw)] = (
-                "/".join(segs)
-            )
+            dir_of[vals] = rel
             dirs[:] = []
     return dir_of
 
 
-def _write_parquet_local(rows, schema, tmp, part_cols) -> bool:
-    """pyarrow half of :func:`write_hive_tmp` over gated ``rows``;
-    False (nothing left in ``tmp``) when a value does not convert."""
+def write_local(src, schema, tmp, part_cols=(), project=None) -> bool:
+    """The pyarrow half of :func:`write_hive_tmp`: writes the rows
+    :func:`fast_rows` admits, in the layout Spark's one-task write
+    leaves (hive dirs ``k=v``, ONE part file per partition value in
+    input order, every column nullable, snappy, footer min/max on,
+    ``parquet.field.id`` metadata stamped as ``PARQUET:field_id``).
+    False, with nothing left in ``tmp``, when the gate declines or a
+    value does not convert."""
+    rows = fast_rows(src, schema, part_cols, project)
+    if rows is None:
+        return False
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -290,7 +355,7 @@ def _write_parquet_local(rows, schema, tmp, part_cols) -> bool:
         groups.setdefault(tuple(r[i] for i in pidx), []).append(r)
     try:
         for pv, grp in groups.items():
-            sub = "/".join(f"{c}={v}" for c, v in zip(part_cols, pv))
+            sub = part_path(part_cols, pv)
             out_dir = os.path.join(tmp, sub) if sub else tmp
             os.makedirs(out_dir, exist_ok=True)
             tbl = pa.Table.from_arrays([

@@ -27,7 +27,11 @@ import pytest
 from rust_dataframe_spark.sources import delta as d
 from rust_dataframe_spark.sources import hudi as h
 from rust_dataframe_spark.sources import iceberg as ice
-from rust_dataframe_spark.sources.lakehouse_util import local_rows_df
+from rust_dataframe_spark.sources.lakehouse_util import (
+    local_rows_df,
+    parse_part_path,
+    part_value,
+)
 
 # name -> (Spark DDL type, four non-null values with a repeat, so a
 # partition column over them makes fewer dirs than rows)
@@ -285,10 +289,25 @@ def _mor_table(spark, path, ddl, rows):
     )
 
 
-def test_hudi_log_commit_gate_matches_collect(spark, tmp_path):
-    ddl = "id int, s string, x double, b boolean, p int"
-    base = [(i, f"s{i}", i / 4, i % 2 == 0, i % 2) for i in range(6)]
-    ups = [(1, "new", 2.0e-4, True, 1), (4, None, -1.5, False, 0)]
+# partition type and values of the two file groups, and how the reader
+# renders the second (the dir value Spark wrote, unescaped)
+LOG_PARTS = {
+    "int": ("int", [0, 1], "1"),
+    "bool": ("boolean", [True, False], "false"),
+    "double": ("double", [2.0e-4, 1.5], "1.5"),
+    "escaped": ("string", ["e f", "c:d"], "c:d"),
+}
+
+
+@pytest.mark.parametrize("part", list(LOG_PARTS))
+def test_hudi_log_commit_gate_matches_collect(spark, tmp_path, part):
+    # updates route to their file group by partition VALUE: a bool,
+    # double or escaped dir holds Spark's rendering ('false', '2.0E-4',
+    # 'c%3Ad'), not str()
+    ptype, pv, shown = LOG_PARTS[part]
+    ddl = f"id int, s string, x double, b boolean, p {ptype}"
+    base = [(i, f"s{i}", i / 4, i % 2 == 0, pv[i % 2]) for i in range(6)]
+    ups = [(1, "new", 2.0e-4, True, pv[1]), (4, None, -1.5, False, pv[0])]
     got = []
     for tagged in (True, False):
         path = str(tmp_path / ("gate" if tagged else "collect"))
@@ -306,7 +325,33 @@ def test_hudi_log_commit_gate_matches_collect(spark, tmp_path):
             ).collect())
         ))
     assert got[0] == got[1]
-    assert (1, "new", 2.0e-4, True, "1") in got[0]
+    assert len(got[0]) == len(base)
+    assert (1, "new", 2.0e-4, True, shown) in got[0]
+    # compaction rewrites each file group in place (same fileId, matched
+    # to the dir Spark writes by value), so the merged view is unchanged
+    h.compact_hudi(spark, path)
+    assert sorted(
+        map(tuple, h.read_hudi(spark, path).select(
+            "id", "s", "x", "b", "p"
+        ).collect())
+    ) == got[1]
+
+
+@pytest.mark.parametrize("t", [*FAST, "decimal", "float"])
+def test_part_value_inverts_spark_dir_rendering(spark, tmp_path, t):
+    # the log router matches rows to dirs through part_value: it must map
+    # every dir Spark writes back to the value the rows hold
+    ddl, vals = TYPES["double"] if t == "float" else TYPES[t]
+    if t == "float":
+        ddl = "float"
+    df = local_rows_df(spark, list(enumerate(vals)), f"id int, p {ddl}")
+    df.write.partitionBy("p").parquet(str(tmp_path / "t"))
+    got = {
+        part_value(v, df.schema["p"].dataType)
+        for d in os.listdir(tmp_path / "t") if d.startswith("p=")
+        for _c, v in parse_part_path(d)
+    }
+    assert got == {r.p for r in df.collect()}
 
 
 def test_hudi_log_commit_struct_takes_collect_path(spark, tmp_path):
@@ -333,6 +378,23 @@ def test_hudi_log_commit_struct_takes_collect_path(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+def _delete_file_ids(path: str) -> dict:
+    import pyarrow.parquet as pq
+
+    (f,) = [
+        os.path.join(path, "data", n)
+        for n in os.listdir(os.path.join(path, "data"))
+        if n.startswith("delete-")
+    ]
+    return {
+        fld.name: (fld.metadata or {}).get(b"PARQUET:field_id")
+        for fld in pq.read_schema(f)
+    }
+
+
+RESERVED_IDS = {"file_path": b"2147483546", "pos": b"2147483545"}
+
+
 def test_position_deletes_above_one_slice_all_apply(spark, tmp_path):
     """A delete set above the 4096-row one-slice bound is written by
     Spark; every delete must land in the ONE registered delete file."""
@@ -347,6 +409,23 @@ def test_position_deletes_above_one_slice_all_apply(spark, tmp_path):
         spark, path, [(files[0]["file_path"], p) for p in range(4200)]
     )
     assert ice.read_iceberg(spark, path).count() == 800
+    assert _delete_file_ids(path) == RESERVED_IDS
+
+
+def test_position_deletes_small_set_written_driver_side(spark, tmp_path):
+    path = str(tmp_path / "t")
+    ice.write_iceberg_commit(
+        spark, path, local_rows_df(spark, [(i,) for i in range(6)], "id int")
+    )
+    _m, files = ice.iceberg_snapshot_files(path)
+    jobs = _spark_jobs(spark, lambda: ice.write_iceberg_position_deletes(
+        spark, path, [(files[0]["file_path"], p) for p in (1, 4)]
+    ))
+    assert jobs == 0
+    assert _delete_file_ids(path) == RESERVED_IDS
+    assert sorted(
+        r.id for r in ice.read_iceberg(spark, path).collect()
+    ) == [0, 2, 3, 5]
 
 
 def test_equality_deletes_gate_matches_spark(spark, tmp_path):
@@ -361,7 +440,11 @@ def test_equality_deletes_gate_matches_spark(spark, tmp_path):
         vals = local_rows_df(spark, [(2, "x"), (5, "y")], ddl)
         if not tagged:
             del vals._sg_rows
-        ice.write_iceberg_equality_deletes(spark, path, vals, ["id"])
+        jobs = _spark_jobs(spark, lambda: ice.write_iceberg_equality_deletes(
+            spark, path, vals, ["id"]
+        ))
+        # gated: no write job and no count job (the footer counts rows)
+        assert (jobs == 0) == tagged
         layouts.append({
             k: [f for f in v if len(f[0]) == 1]  # the 1-column delete file
             for k, v in _layout(path).items()
@@ -372,13 +455,15 @@ def test_equality_deletes_gate_matches_spark(spark, tmp_path):
     assert layouts[0] == layouts[1]
 
 
-@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+@pytest.mark.parametrize("fmt", ["delta", "iceberg", "hudi"])
 def test_escaped_partition_values_read_back(spark, tmp_path, fmt):
     # Spark hive-escapes ':' in the dir name; the commit must move the
-    # files from the dir Spark wrote, not from a re-rendered value
+    # files from the dir Spark wrote, not from a re-rendered value, and
+    # a reader taking values from dir names must unescape them
     write, read = {
         "delta": (d.write_delta_commit, d.read_delta),
         "iceberg": (ice.write_iceberg_commit, ice.read_iceberg),
+        "hudi": (h.write_hudi_commit, h.read_hudi),
     }[fmt]
     rows = [(1, "a b"), (2, "c:d"), (3, "e")]
     path = str(tmp_path / "t")

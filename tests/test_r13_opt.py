@@ -62,6 +62,18 @@ def _untag(df):
     return df
 
 
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` ran: 0 proves the driver-side write was taken."""
+    sc = spark.sparkContext
+    group = f"r13-{os.urandom(6).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _census(root):
     out = {}
     for r, _dirs, files in os.walk(root):
@@ -73,7 +85,7 @@ def _census(root):
 
 
 # ---------------------------------------------------------------------------
-# write_rows_hive_tmp vs the Spark write job
+# write_hive_tmp's driver-side write vs the Spark write job
 # ---------------------------------------------------------------------------
 
 
@@ -86,12 +98,16 @@ def test_hive_tmp_matches_spark_partitioned(spark, tmp_path):
     slow = str(tmp_path / "slow")
     src = local_rows_df(spark, rows, ddl)
     assert fast_rows(src, src.schema, ["p"]) == rows
-    dirs = write_hive_tmp(src, fast, ["p"], src, err_cls=ValueError)
-    assert dirs == {("0",): "p=0", ("1",): "p=1", ("2",): "p=2"}
+    got = {}
+    assert _jobs(spark, lambda: got.update(
+        dirs=write_hive_tmp(src, fast, ["p"], src, err_cls=ValueError)
+    )) == 0
+    assert got["dirs"] == {("0",): "p=0", ("1",): "p=1", ("2",): "p=2"}
     slow_df = _untag(local_rows_df(spark, rows, ddl))
-    assert write_hive_tmp(
-        slow_df, slow, ["p"], slow_df, err_cls=ValueError
-    ) == dirs
+    assert _jobs(spark, lambda: got.update(
+        slow=write_hive_tmp(slow_df, slow, ["p"], slow_df, err_cls=ValueError)
+    )) > 0
+    assert got["slow"] == got["dirs"]
     # same partition dirs, same one-file-per-value census
     cf = {k: v for k, v in _census(fast).items()}
     cs = {k: v for k, v in _census(slow).items()}
@@ -123,8 +139,12 @@ def test_hive_tmp_field_ids_match_spark(spark, tmp_path):
         local_rows_df(spark, rows, "a int, b long"), {"a": 7, "b": 9}
     )
     assert fast_rows(rows, out.schema) == rows
-    write_hive_tmp(out, fast, [], rows, err_cls=ValueError)
-    write_hive_tmp(out, slow, [], out, err_cls=ValueError)  # untagged
+    assert _jobs(
+        spark, lambda: write_hive_tmp(out, fast, [], rows, err_cls=ValueError)
+    ) == 0
+    assert _jobs(  # ``out`` is derived, so untagged: the Spark path
+        spark, lambda: write_hive_tmp(out, slow, [], out, err_cls=ValueError)
+    ) > 0
 
     def ids_of(root):
         f = next(
@@ -169,15 +189,18 @@ def test_hive_tmp_fallbacks(spark):
 def test_hive_tmp_row_order_preserved(spark, tmp_path):
     # positions within a data file are load-bearing for position
     # deletes: input order within each partition group must survive
-    rows = [(i, i % 2) for i in range(10)]
+    import pyarrow.parquet as pq
+
+    rows = [(i, i % 2) for i in (7, 0, 9, 4, 3, 8, 1, 2, 5, 6)]
     fast = str(tmp_path / "fast")
     src = local_rows_df(spark, rows, "id int, p int")
-    write_hive_tmp(src, fast, ["p"], src, err_cls=ValueError)
-    got = [
-        r.id for r in spark.read.parquet(os.path.join(fast, "p=0"))
-        .collect()
-    ]
-    assert got == [0, 2, 4, 6, 8]
+    assert _jobs(spark, lambda: write_hive_tmp(
+        src, fast, ["p"], src, err_cls=ValueError
+    )) == 0
+    for p, want in (("p=0", [0, 4, 8, 2, 6]), ("p=1", [7, 9, 3, 1, 5])):
+        (f,) = os.listdir(os.path.join(fast, p))
+        got = pq.read_table(os.path.join(fast, p, f))["id"].to_pylist()
+        assert got == want
 
 
 # ---------------------------------------------------------------------------
