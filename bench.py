@@ -458,6 +458,9 @@ def main() -> None:
         # stamping the core count makes a human-read comparable_total
         # self-explanatory.  The driver ignores it.
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
+        # the parallelism the session actually ran with, so the record
+        # certifies its core count whatever the env var said
+        "default_parallelism": spark.sparkContext.defaultParallelism,
         # lakehouse fixture queries: build (fixture writes) vs read
         # (executing the returned plan) so the read path is the
         # comparable signal (VERDICT r10 #7)

@@ -21,6 +21,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from .sources.files import read_parquet
 from .sources.lakehouse_util import local_rows_df as _lrd
 
 __all__ = ["QUERIES", "ORACLE", "table"]
@@ -30,7 +31,7 @@ ORACLE: dict[str, str] = {}
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -41,7 +42,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     three to a session-tz (UTC) TimestampType column so every downstream query
     sees identical wall-clock values regardless of the physical encoding."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    e = table(spark, sf_dir, "events")
     ts_type = dict(e.dtypes)["ts"]
     if ts_type == "bigint":  # legacy nanos-as-long
         e = e.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

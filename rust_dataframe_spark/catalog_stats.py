@@ -275,7 +275,7 @@ def q240_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         li,
         "l_returnflag",
         "l_extendedprice",
-        approx=use_approx(li, cache_key=f"{sf_dir}/lineitem"),
+        approx=use_approx(li, path=f"{sf_dir}/lineitem.parquet"),
     )
     return out.select(
         "l_returnflag",

@@ -174,7 +174,7 @@ def q247_equidepth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     qs = [i / 10.0 for i in range(1, 10)]
     qarr = F.array(*[F.lit(q) for q in qs])
-    if use_approx(li, cache_key=f"{sf_dir}/lineitem"):
+    if use_approx(li, path=f"{sf_dir}/lineitem.parquet"):
         cut_expr = F.percentile_approx("l_extendedprice", qarr, APPROX_ACCURACY)
     else:
         cut_expr = F.percentile("l_extendedprice", qarr)

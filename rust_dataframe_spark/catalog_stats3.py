@@ -1804,7 +1804,7 @@ def q288_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         score.alias("score"),
         F.when(F.col("value") > 50.0, 1).otherwise(0).alias("label"),
     )
-    if use_approx(ev, cache_key=f"{sf_dir}/events"):
+    if use_approx(ev, path=f"{sf_dir}/events.parquet"):
         B = 1000
         bounds = scored.agg(
             F.min("score").alias("lo"), F.max("score").alias("hi")
@@ -1911,7 +1911,7 @@ def q289_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ts", "event_id")
         .rowsBetween(-6, 0)
     )
-    if use_approx(load_events(spark, sf_dir), cache_key=f"{sf_dir}/events"):
+    if use_approx(load_events(spark, sf_dir), path=f"{sf_dir}/events.parquet"):
         med = F.percentile_approx("value", F.lit(0.5), F.lit(APPROX_ACCURACY))
     else:
         med = F.percentile("value", F.lit(0.5))
@@ -2275,7 +2275,7 @@ def q295_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("first_buy").cast("long") - F.col("first_view").cast("long")
         ).alias("lag_s"),
     )
-    if use_approx(ev, cache_key=f"{sf_dir}/events"):
+    if use_approx(ev, path=f"{sf_dir}/events.parquet"):
         def pct(q):
             return F.percentile_approx(
                 "lag_s", F.lit(q), F.lit(APPROX_ACCURACY)

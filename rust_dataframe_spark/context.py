@@ -26,6 +26,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .sources import files
+
 __all__ = ["Context", "get_spark", "default_builder", "widen"]
 
 # Public Spark config defaults chosen for the 100 TB design posture.  On a real
@@ -141,7 +143,7 @@ class Context:
 
     # -- convenience readers (SURVEY §2.1) ----------------------------------
     def read_parquet(self, path: str) -> DataFrame:
-        return self.spark.read.parquet(path)
+        return files.read_parquet(self.spark, path)
 
     def read_csv(self, path: str, schema=None, header: bool = True, **options) -> DataFrame:
         reader = self.spark.read.options(header=header, **options)
@@ -159,7 +161,7 @@ class Context:
 
     def table(self, sf_dir: str, name: str) -> DataFrame:
         """Load one of the standard test tables from a scale-factor dir."""
-        return self.spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return self.read_parquet(f"{sf_dir}/{name}.parquet")
 
     # -- SQL entry point ------------------------------------------------------
     def register_tables(self, sf_dir: str, names: list[str]) -> None:

@@ -16,8 +16,10 @@ AUTOMATIC instead of aspirational:
   correctness gate runs the exact, oracle-hash-matched path while the
   sf0.1 bench exercises the approx path every round; production deployments
   set it to their memory budget, e.g. 10M rows per grouped percentile).
-* Counts are cached per logical input so repeated catalog calls in one
-  session don't re-run the job.
+* Counts are cached per version of the input file (its path, size and
+  mtime, the signature ``sources.files.read_parquet`` keys its schemas on),
+  so repeated catalog calls don't re-run the job and a file rewritten at the
+  same path is counted again.
 
 Parity between the two modes is test-pinned with explicit error bounds in
 tests/test_scale_mode.py (rank error ≤ n/accuracy for percentiles — the
@@ -30,6 +32,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from .sources.files import file_signature
+
 MODE_ENV = "SPARK_GRAFT_SCALE_MODE"
 THRESHOLD_ENV = "SPARK_GRAFT_EXACT_ROWS_MAX"
 DEFAULT_EXACT_ROWS_MAX = 75_000
@@ -38,7 +42,8 @@ DEFAULT_EXACT_ROWS_MAX = 75_000
 #: is bounded by n / accuracy (pinned by q266's certificate query).
 APPROX_ACCURACY = 10_000
 
-_COUNT_CACHE: dict[str, int] = {}
+#: absolute path -> (file signature, row count); one entry per path.
+_COUNT_CACHE: dict[str, tuple[tuple[str, int, int], int]] = {}
 
 #: Catalog queries with a documented exact→approx auto-degrade path.  The
 #: correctness harness (tools/check.py) uses this to classify an auto-mode
@@ -69,25 +74,30 @@ def exact_rows_max() -> int:
     return int(os.environ.get(THRESHOLD_ENV, DEFAULT_EXACT_ROWS_MAX))
 
 
-def _cached_count(df: DataFrame, cache_key: str | None) -> int:
-    if cache_key is not None and cache_key in _COUNT_CACHE:
-        return _COUNT_CACHE[cache_key]
+def _cached_count(df: DataFrame, path: str | None) -> int:
+    sig = file_signature(path) if path is not None else None
+    if sig is None:
+        return df.count()
+    hit = _COUNT_CACHE.get(sig[0])
+    if hit is not None and hit[0] == sig:
+        return hit[1]
     n = df.count()
-    if cache_key is not None:
-        _COUNT_CACHE[cache_key] = n
+    _COUNT_CACHE[sig[0]] = (sig, n)
     return n
 
 
-def use_approx(df: DataFrame, *, cache_key: str | None = None) -> bool:
+def use_approx(df: DataFrame, *, path: str | None = None) -> bool:
     """Should this query take its approximate path?
 
     ``df`` is the query's driving input (ideally the bare table scan so the
-    count is parquet-metadata cheap).  ``cache_key`` memoizes the count for
-    repeated calls (pass e.g. ``f"{sf_dir}/lineitem"``).
+    count is parquet-metadata cheap).  ``path`` is the parquet file ``df``
+    reads (e.g. ``f"{sf_dir}/lineitem.parquet"``): its count is reused while
+    that file version is unchanged.  Without a path, or for a path that is
+    not a local file, every call counts.
     """
     mode = scale_mode()
     if mode == "exact":
         return False
     if mode == "approx":
         return True
-    return _cached_count(df, cache_key) > exact_rows_max()
+    return _cached_count(df, path) > exact_rows_max()

@@ -22,8 +22,10 @@ Mapping notes:
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 __all__ = [
     "read_csv",
@@ -74,10 +76,65 @@ def read_json(spark: SparkSession, path: str, schema=None, **options) -> DataFra
     return reader.json(path)
 
 
+#: Session confs whose values change the schema Spark infers from a parquet
+#: footer; each is part of the key a memoized schema is reused under.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+#: absolute path -> (key, schema Spark inferred for that file version).
+#: One entry per path; a changed key replaces it.  Entries are replaced
+#: whole, so two threads reading one file at worst both infer its schema.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def file_signature(path: str) -> tuple[str, int, int] | None:
+    """``(absolute path, st_size, st_mtime_ns)`` of a regular local file, or
+    None for anything else (a directory, a glob, a URI, a missing path).  A
+    file rewritten at the same path changes its size or its mtime, so the
+    signature names one version of the file."""
+    try:
+        st = os.stat(path)
+    except (OSError, TypeError, ValueError):
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return os.path.abspath(path), st.st_size, st.st_mtime_ns
+
+
 def read_parquet(spark: SparkSession, path: str, **options) -> DataFrame:
-    # dir-of-files is native; empty files are skipped by the reader (the
-    # reference had to hand-roll that, dataframe.rs:461-473)
-    return spark.read.options(**options).parquet(path)
+    """Parquet source whose schema is inferred once per file version.
+
+    Inferring a parquet schema runs one Spark job, even for one file (the
+    reference bound a source's schema once from the footer, datasource.rs:
+    44-54).  The first read of a file is a plain inferring read and keeps
+    the inferred ``StructType``; a later read of the same file version,
+    under the same options and inference confs, passes that schema and runs
+    no job.  Only the schema is kept, never the DataFrame: every call builds
+    a fresh relation with fresh attribute ids, so a self-join of two reads
+    still resolves.  A directory (dir-of-files, hive partitions) always
+    takes the plain read; empty files are skipped by the reader (the
+    reference had to hand-roll that, dataframe.rs:461-473)."""
+    reader = spark.read.options(**options)
+    sig = file_signature(path)
+    if sig is None:
+        return reader.parquet(path)
+    key = (
+        sig[1:],
+        tuple(sorted((k, str(v)) for k, v in options.items())),
+        tuple(spark.conf.get(c) for c in _PARQUET_INFERENCE_CONFS),
+    )
+    hit = _SCHEMAS.get(sig[0])
+    if hit is not None and hit[0] == key:
+        return reader.schema(hit[1]).parquet(path)
+    df = reader.parquet(path)
+    _SCHEMAS[sig[0]] = (key, df.schema)
+    return df
 
 
 def read_orc(spark: SparkSession, path: str, **options) -> DataFrame:

@@ -12,6 +12,18 @@ from rust_dataframe_spark.context import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` ran, counted through a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-{os.urandom(6).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("pytest")

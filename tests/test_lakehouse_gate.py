@@ -23,6 +23,7 @@ from datetime import date, datetime
 from decimal import Decimal
 
 import pytest
+from conftest import spark_jobs
 
 from rust_dataframe_spark.sources import delta as d
 from rust_dataframe_spark.sources import hudi as h
@@ -69,17 +70,6 @@ def _frame_spec(data: list[str], part: str | None):
         cols.append(("p", TYPES[part][0], TYPES[part][1]))
     rows = [tuple(c[2][i] for c in cols) for i in range(4)]
     return rows, ", ".join(f"{n} {t}" for n, t, _v in cols)
-
-
-def _spark_jobs(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = f"gate-{os.urandom(6).hex()}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _min_max(st) -> tuple:
@@ -157,7 +147,7 @@ def _differential(spark, tmp_path, write, rows, ddl, expect_fast):
             del frame._sg_rows
         path = str(tmp_path / ("gate" if tagged else "spark"))
         try:
-            jobs = _spark_jobs(spark, lambda: write(path, frame))
+            jobs = spark_jobs(spark, lambda: write(path, frame))
         except Exception as e:  # refused: must be refused by both
             outcomes.append(("raised", type(e).__name__, str(e)))
             continue
@@ -315,7 +305,7 @@ def test_hudi_log_commit_gate_matches_collect(spark, tmp_path, part):
         frame = local_rows_df(spark, ups, ddl)
         if not tagged:
             del frame._sg_rows
-        jobs = _spark_jobs(
+        jobs = spark_jobs(
             spark, lambda: h.write_hudi_log_commit(spark, path, frame)
         )
         assert (jobs == 0) == tagged
@@ -418,7 +408,7 @@ def test_position_deletes_small_set_written_driver_side(spark, tmp_path):
         spark, path, local_rows_df(spark, [(i,) for i in range(6)], "id int")
     )
     _m, files = ice.iceberg_snapshot_files(path)
-    jobs = _spark_jobs(spark, lambda: ice.write_iceberg_position_deletes(
+    jobs = spark_jobs(spark, lambda: ice.write_iceberg_position_deletes(
         spark, path, [(files[0]["file_path"], p) for p in (1, 4)]
     ))
     assert jobs == 0
@@ -440,7 +430,7 @@ def test_equality_deletes_gate_matches_spark(spark, tmp_path):
         vals = local_rows_df(spark, [(2, "x"), (5, "y")], ddl)
         if not tagged:
             del vals._sg_rows
-        jobs = _spark_jobs(spark, lambda: ice.write_iceberg_equality_deletes(
+        jobs = spark_jobs(spark, lambda: ice.write_iceberg_equality_deletes(
             spark, path, vals, ["id"]
         ))
         # gated: no write job and no count job (the footer counts rows)

@@ -25,6 +25,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -62,18 +63,6 @@ def _untag(df):
     return df
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` ran: 0 proves the driver-side write was taken."""
-    sc = spark.sparkContext
-    group = f"r13-{os.urandom(6).hex()}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _census(root):
     out = {}
     for r, _dirs, files in os.walk(root):
@@ -99,12 +88,12 @@ def test_hive_tmp_matches_spark_partitioned(spark, tmp_path):
     src = local_rows_df(spark, rows, ddl)
     assert fast_rows(src, src.schema, ["p"]) == rows
     got = {}
-    assert _jobs(spark, lambda: got.update(
+    assert spark_jobs(spark, lambda: got.update(
         dirs=write_hive_tmp(src, fast, ["p"], src, err_cls=ValueError)
     )) == 0
     assert got["dirs"] == {("0",): "p=0", ("1",): "p=1", ("2",): "p=2"}
     slow_df = _untag(local_rows_df(spark, rows, ddl))
-    assert _jobs(spark, lambda: got.update(
+    assert spark_jobs(spark, lambda: got.update(
         slow=write_hive_tmp(slow_df, slow, ["p"], slow_df, err_cls=ValueError)
     )) > 0
     assert got["slow"] == got["dirs"]
@@ -139,10 +128,10 @@ def test_hive_tmp_field_ids_match_spark(spark, tmp_path):
         local_rows_df(spark, rows, "a int, b long"), {"a": 7, "b": 9}
     )
     assert fast_rows(rows, out.schema) == rows
-    assert _jobs(
+    assert spark_jobs(
         spark, lambda: write_hive_tmp(out, fast, [], rows, err_cls=ValueError)
     ) == 0
-    assert _jobs(  # ``out`` is derived, so untagged: the Spark path
+    assert spark_jobs(  # ``out`` is derived, so untagged: the Spark path
         spark, lambda: write_hive_tmp(out, slow, [], out, err_cls=ValueError)
     ) > 0
 
@@ -194,7 +183,7 @@ def test_hive_tmp_row_order_preserved(spark, tmp_path):
     rows = [(i, i % 2) for i in (7, 0, 9, 4, 3, 8, 1, 2, 5, 6)]
     fast = str(tmp_path / "fast")
     src = local_rows_df(spark, rows, "id int, p int")
-    assert _jobs(spark, lambda: write_hive_tmp(
+    assert spark_jobs(spark, lambda: write_hive_tmp(
         src, fast, ["p"], src, err_cls=ValueError
     )) == 0
     for p, want in (("p=0", [0, 4, 8, 2, 6]), ("p=1", [7, 9, 3, 1, 5])):
