@@ -965,7 +965,8 @@ def q88_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import temporal as tp
 
     li = table(spark, sf_dir, "lineitem")
-    bands = li.sparkSession.createDataFrame(
+    bands = _lrd(
+        spark,
         [("low", 0.0, 9.5), ("mid", 9.5, 27.25), ("high", 27.0, 50.0)],
         "label string, lo double, hi double",
     )

@@ -307,10 +307,11 @@ def bfs_levels(
             return s
         return s  # exotic key types: let schema verification decide
 
-    dist = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(_coerce(s), 0) for s in seeds], numSlices=1
-        ),
+    from ..sources.lakehouse_util import local_rows_df
+
+    dist = local_rows_df(
+        spark,
+        [(_coerce(s), 0) for s in seeds],
         T.StructType(
             [
                 T.StructField("node", node_type, False),

@@ -31,8 +31,10 @@ def hist(df: DataFrame, column: str, nbins: int = 10, density: bool = False) -> 
     ).collect()[0]
     mn, mx = bounds["mn"], bounds["mx"]
     if mn is None:  # all-null column
-        return df.sparkSession.createDataFrame(
-            [], "bucket int, lo double, hi double, count bigint"
+        from ..sources.lakehouse_util import local_rows_df
+
+        return local_rows_df(
+            df.sparkSession, [], "bucket int, lo double, hi double, count bigint"
         )
     if mx == mn:
         mx = mn + 1.0  # single-valued column: one degenerate bucket

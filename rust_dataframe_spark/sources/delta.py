@@ -65,6 +65,7 @@ from .lakehouse_util import (
     parse_conjuncts,
     range_survives,
     fast_schema,
+    local_rows_df,
     write_hive_tmp,
 )
 
@@ -742,7 +743,7 @@ def read_delta(
     if not adds:
         # empty snapshot: typed empty frame from metaData.schemaString
         # (every-column-string would break downstream casts/joins)
-        return spark.createDataFrame([], struct)
+        return local_rows_df(spark, [], struct)
     files = [
         os.path.join(path, _decode_path(a["path"])) for a in adds
     ]
@@ -831,8 +832,6 @@ def read_delta(
         # (mapInPandas over the per-file descriptors), anti-join on
         # (basename, row position) — the Iceberg-position-delete shape
         table_path = os.path.abspath(path)
-        from .lakehouse_util import local_rows_df
-
         desc_df = local_rows_df(
             spark, dvs, "__delta_base string, dv string"
         )
@@ -1867,7 +1866,7 @@ def read_delta_changes(
             + [StructField("_change_type", StringType(), True),
                StructField("_commit_version", LongType(), True)]
         )
-        return spark.createDataFrame([], empty)
+        return local_rows_df(spark, [], empty)
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p)
@@ -2247,8 +2246,6 @@ def compact_delta_files(spark: SparkSession, path: str) -> int:
                 ).alias("__opt_base"),
                 F.col("_metadata.row_index").alias("__opt_pos"),
             )
-            from .lakehouse_util import local_rows_df
-
             desc_df = local_rows_df(
                 spark,
                 [

@@ -214,7 +214,7 @@ def read_arrow_ipc(spark: SparkSession, path: str) -> DataFrame:
 
     with pa.memory_map(path) as source:
         tbl = pa.ipc.open_file(source).read_all()
-    return spark.createDataFrame(tbl.to_pandas())
+    return spark.createDataFrame(tbl)
 
 
 def read_arrow_ipc_dir(
@@ -299,7 +299,7 @@ def write_arrow_ipc(df: DataFrame, path: str) -> None:
     """Arrow IPC bridge (driver-side collect — small frames only)."""
     import pyarrow as pa
 
-    tbl = pa.Table.from_pandas(df.toPandas())
+    tbl = df.toArrow()
     with pa.OSFile(path, "wb") as sink, pa.ipc.new_file(sink, tbl.schema) as writer:
         writer.write_table(tbl)
 

@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .lakehouse_util import (
     attach_file_values,
     fast_rows,
+    local_rows_df,
     parse_part_path,
     part_path,
     part_value,
@@ -1017,7 +1018,7 @@ def read_hudi_incremental(
             StructField(c, StringType(), True) for c in part_cols
             if c not in sample.columns
         ]
-        return spark.createDataFrame([], StructType(fields))
+        return local_rows_df(spark, [], StructType(fields))
     df = spark.read.parquet(*[f for _p, f in cands])
     if "_hoodie_commit_time" not in df.columns:
         raise HudiError(

@@ -1318,7 +1318,7 @@ def read_iceberg(
             f"`{n}` {_ICE_TO_SPARK.get(t, 'string')}"
             for n, t in cols.values()
         )
-        return spark.createDataFrame([], ddl)
+        return local_rows_df(spark, [], ddl)
     pos_dels = [d for d in deletes if d.get("content") == 1]
     eq_dels = [d for d in deletes if d.get("content") == 2]
 
@@ -1458,8 +1458,6 @@ def read_iceberg(
                         F.split(F.input_file_name(), "/"), -1
                     ).alias("__eq_base"),
                 )
-            from .lakehouse_util import local_rows_df
-
             smap = local_rows_df(
                 spark,
                 [(os.path.basename(p), int(d["_data_seq"]))
@@ -1476,8 +1474,10 @@ def read_iceberg(
                 + [F.col("__eq_seq") > F.col("__pv_data_seq")],
             )
             # record_count comes from the delete files' manifest
-            # entries; above the budget the broadcast hint drops and
-            # the null-safe keys hash-partition a sort-merge anti-join
+            # entries; above the budget a merge hint replaces the
+            # broadcast one (the budget, not Spark's size estimate,
+            # picks the strategy) and the null-safe keys
+            # hash-partition a sort-merge anti-join
             # with the seq comparison as its extra condition
             group_rows = sum(
                 int(d.get("record_count") or 0) for d in ds
@@ -1485,7 +1485,7 @@ def read_iceberg(
             right = (
                 F.broadcast(ddf)
                 if group_rows <= _EQ_DELETE_BROADCAST_ROWS
-                else ddf
+                else ddf.hint("merge")
             )
             df = df.join(right, cond, "left_anti")
         df = df.drop("__pv_data_seq")
@@ -1592,7 +1592,7 @@ def read_iceberg_changes(
             f"`{n}` {_ICE_TO_SPARK.get(t, 'string')}"
             for n, t in cols.values()
         ) + ", `_snapshot_id` bigint"
-        return spark.createDataFrame([], ddl)
+        return local_rows_df(spark, [], ddl)
     av = [
         f["file_path"] for f, _sid in added
         if f.get("file_format", "PARQUET").upper() != "PARQUET"

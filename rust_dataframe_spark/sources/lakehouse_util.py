@@ -104,25 +104,46 @@ def range_survives(lo, hi, op: str, val) -> bool:
 
 
 def local_rows_df(spark, rows: list, schema):
-    """Slice-capped DataFrame from driver-local rows.
+    """The one constructor of a DataFrame over driver-local rows.
 
-    ``spark.createDataFrame(rows, ddl)`` parallelizes the list into
-    ``defaultParallelism`` pickled slices (32 on local[32], mostly
-    empty for fixture-sized data); a later ``.coalesce(1)`` then
-    evaluates all 32 slices SEQUENTIALLY in one task — one Python
-    worker round-trip each, ~4.5 s of pure overhead measured for a
-    24-row frame (guide §4: every Python-boundary crossing costs).
-    Slices are therefore capped at one per 4096 rows (fixture-sized
-    frames get exactly ONE): the same rows, the same output, one
-    Python round-trip for the common case, while a genuinely large
-    driver-side list (e.g. a million-file manifest map) still spreads
-    across the cluster."""
+    ``schema`` is a DDL string, a ``StructType`` or a list of column
+    names (types then inferred on the driver from all rows, as
+    ``spark.createDataFrame(rows, names)`` does; no inference job).
+
+    When every column type is in ``_FAST_DATA_TYPES`` the rows are
+    checked on the driver by pyspark's own type verifier (a null in a
+    non-nullable field or a value of the wrong type raises here) and
+    handed to the JVM as one Arrow table: a ``LocalTableScan`` that no
+    job ever evaluates in a Python worker (a job over a pickled frame
+    took 150-250 ms on a 4-core box, a JVM job about 20 ms).  Above
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark itself
+    turns the table into a JVM RDD, so a large list stays distributed.
+    Any other type (timestamp, decimal, binary, nested) takes the
+    pickled ``parallelize`` path.
+
+    Either way the frame has one partition per 4096 rows (fixture-sized
+    frames get exactly ONE; a ``LocalTableScan`` alone would give
+    min(rows, defaultParallelism)), so the layout, and with it the file
+    census of a Spark write of the frame, does not depend on the path.
+    The one difference: an empty Arrow frame scans as zero partitions,
+    not one empty slice (a Spark write of either leaves one file)."""
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = spark._parse_ddl(schema)
+    elif isinstance(schema, (list, tuple)):
+        schema = spark._inferSchemaFromList(rows, names=list(schema))
     n = max(1, min(
         spark.sparkContext.defaultParallelism, (len(rows) + 4095) // 4096
     ))
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, numSlices=n), schema
-    )
+    if isinstance(schema, StructType) and fast_schema(schema):
+        df = spark.createDataFrame(_arrow_table(rows, schema), schema)
+        if len(rows) > 1:  # 0 or 1 rows already scan as one slice
+            df = df.coalesce(n)
+    else:
+        df = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, numSlices=n), schema
+        )
     if n == 1:
         # Fast-path tag: the lakehouse writers recognize a one-slice
         # local frame and can write its data file DRIVER-SIDE (pyarrow)
@@ -137,6 +158,25 @@ def local_rows_df(spark, rows: list, schema):
     return df
 
 
+def _arrow_table(rows: list, schema):
+    """``rows`` as a ``pa.Table`` of ``schema`` after the checks and the
+    conversion (``StructType.toInternal``: dates to epoch days) that
+    ``spark.createDataFrame`` applies to each row of a pickled frame."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    verify = _make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*map(schema.toInternal, rows))) or [[]] * len(schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(cols, arrow_schema.types)],
+        schema=arrow_schema,
+    )
+
+
 def tagged_rows(df: DataFrame) -> list[tuple] | None:
     """Driver-local rows of a one-slice :func:`local_rows_df` frame,
     or None for any other DataFrame (including anything derived from
@@ -146,8 +186,10 @@ def tagged_rows(df: DataFrame) -> list[tuple] | None:
 
 # Types for which the pyarrow fast path is pinned byte-equivalent to
 # Spark's writers (tests/test_lakehouse_gate.py: same read-back values,
-# same footer min/max stats, same file census).  All flat; anything
-# else falls back to the Spark write job.
+# same footer min/max stats, same file census) and the Arrow-built
+# frames of local_rows_df to its pickled ones (tests/test_local_frames.py:
+# same schema, rows, partitions and files).  All flat; anything else
+# falls back to the Spark write job and the pickled frame.
 _FAST_DATA_TYPES = {
     "integer", "long", "string", "double", "float", "boolean", "date",
     "short", "byte",
@@ -381,21 +423,18 @@ def write_local(src, schema, tmp, part_cols=(), project=None) -> bool:
 def assert_unique_basenames(
     paths: list[str], *, err_cls: type[Exception], tag: str
 ) -> None:
-    """Loud duplicate-basename check for any basename-keyed join.
-
-    ``attach_file_values`` performs this check itself, but the
-    position-delete / deletion-vector anti-joins key on the scan
-    basename WITHOUT going through it — an unpartitioned table with
-    two live files sharing a basename in different directories would
-    otherwise tombstone rows in the wrong file silently."""
+    """Loud duplicate-basename check for any basename-keyed join: the
+    file-map join of :func:`attach_file_values` and the position-delete
+    / deletion-vector anti-joins.  Two live files sharing a basename in
+    different directories would otherwise attach values to, or
+    tombstone rows in, the wrong file silently."""
     seen: dict[str, str] = {}
     for path in paths:
         base = os.path.basename(path)
         if base in seen and seen[base] != path:
             raise err_cls(
                 f"{tag}: duplicate data-file basename {base!r} "
-                "(basename-keyed row-level-delete join would be "
-                "ambiguous)"
+                "(basename-keyed join would be ambiguous)"
             )
         seen[base] = path
 
@@ -416,27 +455,13 @@ def attach_file_values(
     ``key_col`` the basename was already computed into that column
     (needed when a join sits between the scan and this call, where
     ``input_file_name()`` would be ambiguous); the column is kept."""
-    rows = []
-    seen: dict[str, str] = {}
-    for path, vals in file_to_vals:
-        base = os.path.basename(path)
-        if base in seen and seen[base] != path:
-            raise err_cls(
-                f"{tag}: duplicate data-file basename {base!r} "
-                "(file-map join would be ambiguous)"
-            )
-        seen[base] = path
-        rows.append((base, *vals))
+    assert_unique_basenames(
+        [path for path, _vals in file_to_vals], err_cls=err_cls, tag=tag
+    )
+    rows = [(os.path.basename(path), *vals) for path, vals in file_to_vals]
     key = key_col or f"__{tag}_file"
-    map_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            rows,
-            numSlices=max(1, min(
-                spark.sparkContext.defaultParallelism,
-                (len(rows) + 4095) // 4096,
-            )),
-        ),
-        [key] + [f"__pv_{c}" for c in value_cols],
+    map_df = local_rows_df(
+        spark, rows, [key] + [f"__pv_{c}" for c in value_cols]
     )
     if key_col is None:
         df = df.withColumn(

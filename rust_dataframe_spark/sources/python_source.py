@@ -205,7 +205,9 @@ def read_manifest_dir(spark: SparkSession, path: str, schema):
         manifest = _json.loads(fh.read())
     files = [os.path.join(path, f) for f in manifest["files"]]
     if not files:
-        return spark.createDataFrame([], schema)
+        from .lakehouse_util import local_rows_df
+
+        return local_rows_df(spark, [], schema)
     return spark.read.schema(schema).json(files)
 
 

@@ -696,3 +696,19 @@ def test_filtered_ann_predicate_pushed_below_candidate_join(spark):
     failing the filter are never decoded or shuffled."""
     df = catalog.QUERIES["q388_filtered_ann"](spark, SF)
     assert "label" in pi.pushed_filters(df)
+
+
+@pytest.mark.parametrize("name", [
+    "q452_iceberg_table", "q453_hudi_table", "q480_delta_stream_sink",
+])
+def test_driver_local_frames_scan_as_local_relations(spark, name):
+    """The file->partition maps of the lakehouse readers and q480's census
+    rows are Arrow-built LocalRelations: no pickled ``Scan ExistingRDD``
+    (a Python worker round trip per job) in the returned plan."""
+    from rust_dataframe_spark.operators import cache as oc
+
+    df = catalog.QUERIES[name](spark, SF)
+    plan = pi.physical_plan(df)
+    oc.release()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan

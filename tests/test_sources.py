@@ -61,6 +61,29 @@ class TestRoundTrips:
         back = fs.read_arrow_ipc(spark, p).orderBy("id")
         assert [r["id"] for r in back.collect()] == [1, 2, 3]
 
+    def test_arrow_ipc_keeps_nullable_int_and_bool(self, spark, tmp_path):
+        """A nullable int64 or bool column comes back with its type and
+        its nulls (a pandas hop would turn them into double / object)."""
+        import pyarrow as pa
+
+        p = str(tmp_path / "nullable.arrow")
+        tbl = pa.table({
+            "n": pa.array([1, None, 3], pa.int64()),
+            "b": pa.array([True, None, False], pa.bool_()),
+        })
+        with pa.OSFile(p, "wb") as sink, pa.ipc.new_file(sink, tbl.schema) as w:
+            w.write_table(tbl)
+        back = fs.read_arrow_ipc(spark, p)
+        assert back.dtypes == [("n", "bigint"), ("b", "boolean")]
+        assert [tuple(r) for r in back.collect()] == [
+            (1, True), (None, None), (3, False)]
+        # and the writer keeps them too
+        p2 = str(tmp_path / "nullable2.arrow")
+        fs.write_arrow_ipc(back, p2)
+        again = fs.read_arrow_ipc(spark, p2)
+        assert again.dtypes == back.dtypes
+        assert again.collect() == back.collect()
+
     def test_arrow_ipc_dir_roundtrip_multifile(self, spark, tmp_path):
         """Executor-side IPC path: N partitions -> N files -> parallel decode."""
         p = str(tmp_path / "ipc_dir")

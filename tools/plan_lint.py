@@ -18,6 +18,12 @@ Patterns flagged per query:
   axes) still show the pattern, so hits are LISTED with the query name for
   review rather than hard-failed; the curated allowlist below records the
   reviewed-and-bounded cases with the reason.
+* ``Scan ExistingRDD`` — a scan of an existing RDD: a frame built from a
+  pickled Python RDD, whose every job runs a Python worker round trip, or
+  a checkpointed frame.  Driver-local rows of the pinned flat types are
+  Arrow-built LocalRelations (``lakehouse_util.local_rows_df``), so the
+  pickled frames that remain show up in this ``rdd-review`` list: a review
+  list, not a lint failure.
 
 Writes PLANLINT.md (or appends with --only).  Usage:
 python tools/plan_lint.py [--sf DIR] [--only qA qB ...]
@@ -248,7 +254,7 @@ def main() -> int:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     rows = []
-    n_cart = n_bnlj_review = n_sp_new = n_err = 0
+    n_cart = n_bnlj_review = n_sp_new = n_err = n_rdd = 0
     names = sorted(catalog.QUERIES)
     only: list[str] = []
     if "--only" in sys.argv:
@@ -286,6 +292,9 @@ def main() -> int:
             else:
                 findings.append("SP-NEW")
                 n_sp_new += 1
+        if "Scan ExistingRDD" in plan:
+            findings.append("rdd-review")
+            n_rdd += 1
         if findings:
             rows.append((name, " ".join(findings)))
 
@@ -295,20 +304,26 @@ def main() -> int:
         f"{len(names)} queries planned at sf0.001; generated by tools/plan_lint.py. "
         f"Hard findings: CARTESIAN={n_cart}, "
         f"BNLJ-review={n_bnlj_review}, new-unreviewed-SinglePartition={n_sp_new}, "
-        f"plan-errors={n_err}.",
+        f"plan-errors={n_err}. Review list: pickled-RDD scans "
+        f"(rdd-review)={n_rdd}.",
         "",
         "| query | finding |",
         "|---|---|",
     ]
     for name, f in rows:
-        if only_fail and ("ok" in f or f == "sp-allowed"):
+        if only_fail and not any(
+            t in f for t in ("CARTESIAN", "BNLJ-review", "SP-NEW", "ERR")
+        ):
             continue
         note = SINGLE_PARTITION_ALLOW.get(name, "")
         lines.append(f"| {name} | {f}{' — ' + note if note and 'sp-allowed' in f else ''} |")
     lines.append("")
     lines.append(
         "`sp-allowed` rows are reviewed bounded-axis windows (reason inline); "
-        "`bnlj-scalar-ok` rows are 1-row scalar broadcast attachments.  Any "
+        "`bnlj-scalar-ok` rows are 1-row scalar broadcast attachments; "
+        "`rdd-review` rows scan an existing RDD (`Scan ExistingRDD`): a "
+        "pickled Python frame (a `mapInPandas` feeder, a non-flat-typed "
+        "`local_rows_df`) or a checkpointed one.  Any "
         "CARTESIAN / BNLJ-review / SP-NEW row is a lint failure."
     )
     out = "\n".join(lines) + "\n"
