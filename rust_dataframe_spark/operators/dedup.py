@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .cache import persist_tracked
+from .fixpoint import fixpoint
 
 __all__ = [
     "exact_dedup",
@@ -346,55 +347,36 @@ def dup_clusters(
     Iterative min-label propagation: each round every node takes the min of
     its own and its neighbors' labels; converges in O(graph diameter) rounds
     (near-dup graphs are shallow — dup clusters are cliques or short chains).
-    Each round is one join + one map-side-combined groupBy; the driver only
-    checks a one-row convergence count.  For planet-scale graphs swap in the
-    alternating large-star/small-star algorithm (same primitive ops, better
-    worst-case rounds).
-
-    Every round ``localCheckpoint``s the new labels — the essential move for
-    ANY iterative DataFrame algorithm: persist() caches data but the logical
-    plan still doubles per round (labels feeds both union branches), so by
-    round ~10 planning itself OOMs.  Checkpointing truncates the lineage to
-    the materialized result; plan size stays constant.  (Pinned by the
-    diameter-9 chain test, which OOMed without this.)
+    Each round is one join + one map-side-combined groupBy, run by
+    ``fixpoint.fixpoint`` in converge mode: every round is checkpointed (the
+    labels feed both union branches, so the plan would double per round —
+    the diameter-9 chain test OOMed without it) and the checkpoint job
+    itself computes the label set's convergence signature.  For
+    planet-scale graphs swap in the alternating large-star/small-star
+    algorithm (same primitive ops, better worst-case rounds).
     """
     fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     rev = pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    adj = fwd.unionByName(rev).distinct().persist()
-    labels = (
-        adj.select(F.col("src").alias("id"))
-        .distinct()
-        .select(F.col("id"), F.col("id").alias("label"))
-        .localCheckpoint()
-    )
-    converged = False
-    for _ in range(max_iter):
+    adj = persist_tracked(fwd.unionByName(rev).distinct())
+    labels = adj.select(F.col("src").alias("id"), F.col("src").alias("label")).distinct()
+
+    def _round(labels: DataFrame, _r: int) -> DataFrame:
         neigh = (
             adj.join(labels, adj["dst"] == labels["id"])
             .select(adj["src"].alias("id"), F.col("label"))
         )
-        new_labels = (
-            labels.unionByName(neigh).groupBy("id").agg(F.min("label").alias("label"))
-        ).localCheckpoint()
-        changed = (
-            new_labels.join(labels.withColumnRenamed("label", "old"), "id")
-            .filter(F.col("label") != F.col("old"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
+        return labels.unionByName(neigh).groupBy("id").agg(F.min("label").alias("label"))
+
+    # an un-converged label set is silently WRONG (labels only traveled
+    # max_iter hops): fixpoint raises rather than return it
+    labels = fixpoint(
+        labels,
+        _round,
+        max_iter,
+        converge="dup_clusters",
+        remedy="raise max_iter, or use dup_clusters_star (O(log^2 n) rounds)",
+    )
     adj.unpersist()
-    if not converged:
-        # an un-converged label set is silently WRONG (labels only traveled
-        # max_iter hops); refuse rather than return it
-        raise RuntimeError(
-            f"dup_clusters did not converge in {max_iter} rounds (graph diameter "
-            "exceeds max_iter) — raise max_iter, or use dup_clusters_star, whose "
-            "round count is O(log^2 n) independent of diameter"
-        )
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -845,10 +827,9 @@ def dup_clusters_star(
     * **small-star**: every node points its smaller-or-equal neighbors (and
       itself) at that minimum — stars flatten to depth 1.
 
-    Both are one groupBy + one join over the edge list; rounds
-    ``localCheckpoint`` for the same lineage-truncation reason as
-    ``dup_clusters``.  Convergence: the edge set is a fixed point (star
-    edges only).
+    Both are one groupBy + one join over the edge list, run by
+    ``fixpoint.fixpoint`` in converge mode as in ``dup_clusters``.
+    Convergence: the edge set is a fixed point (star edges only).
     """
 
     def _large_star(e: DataFrame) -> DataFrame:
@@ -885,57 +866,29 @@ def dup_clusters_star(
     fwd = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
     rev = pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v"))
     nodes = fwd.select("u").unionByName(rev.select("u")).distinct()
-    edges = fwd.unionByName(rev).filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
-
-    def _canon(e: DataFrame) -> DataFrame:
-        return e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-
-    # Convergence probe (round 13): ONE order-independent signature job
-    # per round — (canonical edge count, sum of per-edge xxhash64) —
-    # instead of two exceptAll jobs.  Equal signatures trigger the
-    # EXACT set comparison once (equal counts make the one-sided
-    # exceptAll sufficient), so a hash collision can only cost one
-    # extra verify job, never a wrong early stop; the fixed point and
-    # the executed round count are identical to the old probe's.
-    def _sig(e: DataFrame) -> tuple:
-        srow = _canon(e).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        return (srow["n"], srow["h"])
-
-    # (Round 13 negative probe, kept for the record: batching TWO star
-    # rounds per checkpoint/probe measured 12.4 -> 17.0 s on q374 — the
-    # doubled un-checkpointed plan cost more per job than the saved
-    # job floors, the same failure mode as round 12's reverted fused
-    # probe.  One round per checkpoint is the measured optimum.)
-    prev_sig = _sig(edges)
-    for _ in range(max_iter):
-        new_edges = _small_star(_large_star(edges)).localCheckpoint()
-        sig = _sig(new_edges)
-        if sig == prev_sig and (
-            _canon(new_edges).exceptAll(_canon(edges)).limit(1).count()
-            == 0
-        ):
-            edges = new_edges
-            break
-        prev_sig = sig
-        edges = new_edges
-    else:
-        # an edge set that is not yet all stars would label each node with
-        # a local minimum, not its component's: refuse rather than return it
-        raise RuntimeError(
-            f"dup_clusters_star did not converge in {max_iter} rounds — "
-            "raise max_iter"
-        )
-    # fixed point: star edges (node -> component_min); roots label themselves
-    labels = (
-        edges.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .groupBy("u")
-        .agg(F.min("v").alias("cluster_id"))
+    # the state is kept in the canonical (greater, lesser) orientation that
+    # _small_star emits, so the initial edge set's signature is comparable
+    # with round 1's and an already-star graph stops after one round
+    edges = (
+        fwd.filter(F.col("u") != F.col("v"))
+        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+        .distinct()
     )
+    # (Round 13 negative probe, kept for the record: batching TWO star
+    # rounds per checkpoint measured 12.4 -> 17.0 s on q374 — the doubled
+    # un-checkpointed plan cost more per job than the saved job floors.)
+    # An edge set that is not yet all stars would label each node with a
+    # local minimum, not its component's: fixpoint raises rather than
+    # return it.
+    edges = fixpoint(
+        edges,
+        lambda e, _r: _small_star(_large_star(e)),
+        max_iter,
+        converge="dup_clusters_star",
+        remedy="raise max_iter",
+    )
+    # fixed point: star edges (node -> component_min); roots label themselves
+    labels = edges.groupBy("u").agg(F.min("v").alias("cluster_id"))
     roots = nodes.join(labels.select("u"), "u", "left_anti").select(
         F.col("u"), F.col("u").alias("cluster_id")
     )

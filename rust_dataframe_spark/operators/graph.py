@@ -20,8 +20,7 @@ Scale shape per iteration (the classic Spark PageRank layout):
   and persisted — every iteration's rank join reuses that partitioning, so
   only the O(nodes) rank table moves per round, never the O(edges) table.
 * contributions aggregate map-side into a dst-keyed shuffle of O(nodes) rows.
-* lineage is truncated with ``localCheckpoint`` every ``checkpoint_every``
-  rounds (same OOM guard as dedup.dup_clusters; plan depth stays bounded).
+* lineage is truncated by ``fixpoint.fixpoint`` (plan depth stays bounded).
 
 Dangling nodes (no out-links) follow the standard simplification: their mass
 is dropped rather than redistributed, so ranks are a lower bound; the
@@ -34,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .cache import persist_tracked
+from .fixpoint import LINEAR_EVERY, fixpoint
 
 __all__ = [
     "pagerank",
@@ -55,7 +55,6 @@ def pagerank(
     damping_num: int = 85,
     damping_den: int = 100,
     scale: int = 1_000_000,
-    checkpoint_every: int = 5,
     redistribute_dangling: bool = False,
     seeds: list | None = None,
 ) -> DataFrame:
@@ -114,7 +113,8 @@ def pagerank(
         dangling = persist_tracked(
             nodes.join(deg.select(F.col(src).alias("node")), "node", "left_anti")
         )
-    for i in range(n_iter):
+
+    def _round(ranks: DataFrame, _r: int) -> DataFrame:
         rsrc = ranks.select(F.col("node").alias("__esrc"), F.col("r").alias("__r"))
         sums = (
             e.join(rsrc, "__esrc")
@@ -142,15 +142,17 @@ def pagerank(
         base_term = (
             F.lit(base) + share_col if base_col is None else base_col + share_col
         )
-        ranks = joined.select(
+        return joined.select(
             "node",
             (base_term + F.coalesce(F.col("__s"), F.lit(0)))
             .cast("bigint")
             .alias("r"),
         )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < n_iter:
-            ranks = ranks.localCheckpoint()
-    return ranks
+
+    # the dangling share reads the ranks a second time, which doubles the
+    # plan per round
+    every = 1 if redistribute_dangling else LINEAR_EVERY
+    return fixpoint(ranks, _round, n_iter, every=every)
 
 
 def cooccurrence_edges(
@@ -260,7 +262,6 @@ def bfs_levels(
     *,
     seeds: list,
     max_hops: int = 6,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Multi-source BFS hop distances: ``(node, dist)`` = fewest hops from
     any seed, for every node within ``max_hops`` — k-hop neighborhoods,
@@ -268,8 +269,8 @@ def bfs_levels(
     directions for an undirected walk.
 
     Each round joins the current distance table with the edge list and
-    folds with a min-aggregate; ``localCheckpoint`` truncates lineage on
-    the same cadence as ``dup_clusters`` (the iterative-plan OOM guard).
+    folds with a min-aggregate; ``fixpoint`` truncates lineage every
+    ``LINEAR_EVERY`` rounds (the iterative-plan OOM guard).
     Rounds are bounded by ``max_hops`` — unlike connected components, the
     answer itself is hop-bounded, so termination is structural.  Per-round
     cost: one shuffle keyed by node; the frontier argument of the join is
@@ -320,19 +321,19 @@ def bfs_levels(
         ),
     )
     e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-    for h in range(1, max_hops + 1):
+
+    def _round(dist: DataFrame, _r: int) -> DataFrame:
         nxt = (
             dist.join(e, dist["node"] == e["__s"])
             .select(F.col("__d").alias("node"), (F.col("dist") + 1).alias("dist"))
         )
-        dist = (
+        return (
             dist.unionByName(nxt)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        if h % checkpoint_every == 0:
-            dist = dist.localCheckpoint(eager=True)
-    return dist
+
+    return fixpoint(dist, _round, max_hops, every=LINEAR_EVERY)
 
 
 def label_propagation(
@@ -341,7 +342,6 @@ def label_propagation(
     dst: str = "v",
     *,
     rounds: int = 3,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Synchronous label propagation (community detection): every node starts
     as its own label; each round, a node adopts the label held by the
@@ -373,10 +373,9 @@ def label_propagation(
     ``label = node``.
 
     Scale per round: one edge-by-label equi-join (edges hash-partitioned by
-    ``src`` once, persisted, reused every round — only the O(nodes) label
-    table moves), one (node,label)-keyed count aggregate (map-side
-    partial), one max_by per node.  Lineage is truncated on the
-    ``pagerank`` cadence.
+    ``src`` — only the O(nodes) label table moves), one (node,label)-keyed
+    count aggregate (map-side partial), one max_by per node.  Lineage is
+    truncated every ``LINEAR_EVERY`` rounds, as in ``pagerank``.
     """
     _NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double")
     dtypes = dict(edges.dtypes)
@@ -396,10 +395,10 @@ def label_propagation(
         .distinct()
         .repartition(F.col("__s"))
     )
-    sym = persist_tracked(sym)
     nodes = sym.select(F.col("__s").alias("node")).distinct()
     labels = nodes.select("node", F.col("node").alias("label"))
-    for r in range(1, rounds + 1):
+
+    def _round(labels: DataFrame, _r: int) -> DataFrame:
         neigh = sym.join(
             labels.withColumnRenamed("node", "__d"), "__d"
         ).select(F.col("__s").alias("node"), "label")
@@ -408,16 +407,13 @@ def label_propagation(
         )
         # plurality with (cnt DESC, label ASC) total order: max over a
         # struct whose second field is the NEGATED label (numeric keys)
-        labels = counted.groupBy("node").agg(
+        return counted.groupBy("node").agg(
             F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl")))
             .getField("nl")
             .alias("label")
         ).select("node", (-F.col("label")).alias("label"))
-        if r % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=True)
-    out = labels
-    sym.unpersist()
-    return out
+
+    return fixpoint(labels, _round, rounds, every=LINEAR_EVERY)
 
 
 def sssp(
@@ -428,7 +424,6 @@ def sssp(
     *,
     seeds: DataFrame,
     rounds: int = 4,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Single-source (multi-seed) shortest paths, Bellman-Ford style: after
     ``rounds`` relaxation rounds the result is EXACTLY the shortest
@@ -462,7 +457,8 @@ def sssp(
     dist = seeds.select(
         F.col("node"), F.lit(0.0).cast("double").alias("dist")
     ).distinct()
-    for r in range(1, rounds + 1):
+
+    def _round(dist: DataFrame, _r: int) -> DataFrame:
         cand = (
             dist.join(e, dist["node"] == e["__s"])
             .select(
@@ -470,14 +466,9 @@ def sssp(
                 (F.col("dist") + F.col("__w")).alias("dist"),
             )
         )
-        dist = (
-            dist.unionByName(cand).groupBy("node").agg(F.min("dist").alias("dist"))
-        )
-        if r % checkpoint_every == 0:
-            dist = dist.localCheckpoint(eager=True)
-    out = dist
-    e.unpersist()
-    return out
+        return dist.unionByName(cand).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    return fixpoint(dist, _round, rounds, every=LINEAR_EVERY)
 
 
 def k_core(
@@ -487,7 +478,6 @@ def k_core(
     *,
     k: int = 3,
     rounds: int = 4,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """k-core pruning: repeatedly delete nodes of degree < ``k`` (and their
     edges) for a FIXED number of rounds; returns ``(node, deg)`` for the
@@ -503,8 +493,8 @@ def k_core(
     Takes canonical ``u < v`` undirected edges (cooccurrence_edges
     output); symmetrizes internally.  Scale per round: one degree count
     (map-side partial) + two semi-joins of the edge list against the
-    surviving-node table, all keyed by node; lineage truncated on the
-    usual cadence.
+    surviving-node table, all keyed by node; lineage truncated every
+    round.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -515,13 +505,15 @@ def k_core(
     # lazy tree doubles per round — truncate EVERY round (the edge set
     # only shrinks; same 2^rounds analysis-cost guard as power_iteration)
     sym = sym.localCheckpoint(eager=True)
-    for _ in range(rounds):
+
+    def _round(sym: DataFrame, _r: int) -> DataFrame:
         deg = sym.groupBy("__s").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("__s")
-        sym = sym.join(keep, "__s", "left_semi").join(
+        return sym.join(keep, "__s", "left_semi").join(
             keep.withColumnRenamed("__s", "__d"), "__d", "left_semi"
         )
-        sym = sym.localCheckpoint(eager=True)
+
+    sym = fixpoint(sym, _round, rounds)
     return (
         sym.groupBy(F.col("__s").alias("node"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))

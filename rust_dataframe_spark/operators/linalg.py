@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .fixpoint import fixpoint
+
 __all__ = [
     "gram_matrix",
     "covariance_matrix",
@@ -132,16 +134,18 @@ def power_iteration(cov: DataFrame, *, iters: int = 5) -> DataFrame:
     x = c.select(F.col("i").alias("j")).distinct().withColumn(
         "x", F.lit(1.0).cast("double")
     )
-    for _ in range(iters):
+
+    def _round(x: DataFrame, _r: int) -> DataFrame:
         y = matvec_ordered(c, x)
         nrm = fold_ordered(y, "i", "y", lambda acc, v: acc + v * v).select(
             F.sqrt("acc").alias("nrm")
         )
-        x = y.crossJoin(F.broadcast(nrm)).select(
+        return y.crossJoin(F.broadcast(nrm)).select(
             F.col("i").alias("j"), (F.col("y") / F.col("nrm")).alias("x")
         )
-        # y feeds both nrm and x, so the lazy tree DOUBLES per round —
-        # truncate per round (d rows; values unchanged) or Catalyst pays
-        # 2^iters analysis cost on the final plan
-        x = x.localCheckpoint(eager=True)
+
+    # y feeds both nrm and x, so the lazy tree DOUBLES per round —
+    # truncate per round (d rows; values unchanged) or Catalyst pays
+    # 2^iters analysis cost on the final plan
+    x = fixpoint(x, _round, iters)
     return x.select(F.col("j").alias("i"), "x")

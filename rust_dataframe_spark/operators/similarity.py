@@ -24,6 +24,7 @@ import random
 from pyspark.sql import DataFrame, functions as F
 
 from .cache import persist_tracked
+from .fixpoint import fixpoint
 
 __all__ = [
     "cosine",
@@ -883,7 +884,8 @@ def mmr_select(
         .select("cid", F.lit(1).alias("rank"), F.col("rel").alias("score"))
         .localCheckpoint(eager=True)
     )
-    for r in range(2, k + 1):
+
+    def _round(sel: DataFrame, r: int) -> DataFrame:
         pen = (
             sims.join(sel.select(F.col("cid").alias("cb")), "cb")
             .groupBy(F.col("ca").alias("cid"))
@@ -904,11 +906,11 @@ def mmr_select(
         pick = (
             scored.orderBy(F.col("score").desc(), F.col("cid").asc())
             .limit(1)
-            .withColumn("rank", F.lit(r))
+            .withColumn("rank", F.lit(r + 1))
         )
-        sel = sel.unionByName(pick.select("cid", "rank", "score")).localCheckpoint(
-            eager=True
-        )
+        return sel.unionByName(pick.select("cid", "rank", "score"))
+
+    sel = fixpoint(sel, _round, k - 1)
     short.unpersist()
     sims.unpersist()
     return sel

@@ -445,9 +445,10 @@ def kmeans(
     same tiny-artifact exception as LSH planes); the update posexplodes to
     (cell, dim, value) and partial-aggregates the mean, so the shuffle is
     O(k * dim * partitions) rows, never the vectors themselves.  The driver
-    round-trips k rows per iteration — equivalent to dup_clusters' one-row
-    convergence check, not a data collect.  Empty cells keep their previous
-    centroid.
+    round-trips k rows per iteration — a tiny artifact, not a data collect;
+    the centroids live on the driver, so this loop has no frame lineage to
+    truncate and does not run through ``fixpoint.fixpoint``.  Empty cells
+    keep their previous centroid.
     """
     if k <= 0 or n_iter <= 0:
         raise ValueError(f"k and n_iter must be positive, got k={k}, n_iter={n_iter}")
