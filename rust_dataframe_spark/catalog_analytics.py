@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .catalog import load_events, query, table
+from .operators import pairs as pr
 from .operators import ranking as rk
 from .operators import similarity as sim
 from .operators import training as tr
@@ -530,18 +531,9 @@ def q209_srp_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    emb = sim.as_double(F.col("embedding"))
-    va = e.select(F.col("vec_id").alias("id_a"), emb.alias("emb_a"))
-    vb = e.select(F.col("vec_id").alias("id_b"), emb.alias("emb_b"))
-    cos = sim.cosine(F.col("emb_a"), F.col("emb_b"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cos.alias("raw"))
-        .filter(F.col("raw") >= 0.35)
-        .select("id_a", "id_b", F.round("raw", 6).alias("cos_sim"))
-        .orderBy("id_a", "id_b")
-    )
+    emb = {"emb": sim.as_double(F.col("embedding"))}
+    verified = sim.cosine_verify(pr.with_payload(cand, e, "vec_id", emb), ["id_a", "id_b"], 0.35)
+    return verified.orderBy("id_a", "id_b")
 
 
 # ---------------------------------------------------------------------------

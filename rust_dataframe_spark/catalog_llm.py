@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .catalog import ORACLE, QUERIES, load_events, query, table
 from .operators import dedup as dd
 from .operators import multimodal as mm
+from .operators import pairs as pr
 from .operators import similarity as sim
 from .operators import text as tx
 from .sources.lakehouse_util import local_rows_df as _lrd
@@ -261,9 +262,7 @@ def q330_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = dd.lsh_candidate_pairs(sig, "doc_id", "sig", bands=4, rows_per_band=4)
     a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
+    jac = dd.shingle_jaccard(F.col("sh_a"), F.col("sh_b"), None)
     truth = (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .filter(jac >= 0.5)
@@ -390,23 +389,10 @@ def q76_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs."""
     e = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
     cands = sim.srp_candidates(e, "vec_id", "embedding", n_planes=4, seed=42)
-    a = cands.select(F.col("vec_id").alias("id_a"), "bucket")
-    b = cands.select(F.col("vec_id").alias("id_b"), F.col("bucket").alias("bucket_b"))
-    pairs = a.join(
-        b, (F.col("bucket") == F.col("bucket_b")) & (F.col("id_a") < F.col("id_b"))
-    ).select("id_a", "id_b")
-    emb = sim.as_double(F.col("embedding"))
-    va = e.select(F.col("vec_id").alias("id_a"), emb.alias("emb_a"))
-    vb = e.select(F.col("vec_id").alias("id_b"), emb.alias("emb_b"))
-    cos = sim.cosine(F.col("emb_a"), F.col("emb_b"))
-    return (
-        pairs.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cos.alias("raw"))
-        .filter(F.col("raw") >= 0.35)
-        .select("id_a", "id_b", F.round("raw", 6).alias("cos_sim"))
-        .orderBy("id_a", "id_b")
-    )
+    pairs = pr.self_pairs(cands, "vec_id", ["bucket"], distinct=False)
+    emb = {"emb": sim.as_double(F.col("embedding"))}
+    verified = sim.cosine_verify(pr.with_payload(pairs, e, "vec_id", emb), ["id_a", "id_b"], 0.35)
+    return verified.orderBy("id_a", "id_b")
 
 
 def _srp_oracle() -> str:

@@ -374,19 +374,11 @@ def q165_stream_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     s_idx = dd.lsh_band_index(stream, "doc_id", "text", carry_cols=["text"]).select(
         F.col("doc_id").alias("new_id"), F.col("text").alias("__ta"), "band", "bh"
     )
-    sh_a = F.array_distinct(dd.shingle(F.col("__ta"), 3))
-    sh_b = F.array_distinct(dd.shingle(F.col("__tb"), 3))
+    jac = dd.shingle_jaccard(F.col("__ta"), F.col("__tb"), 3)
     verified = (
         s_idx.join(old_idx, ["band", "bh"])  # stream-static: stateless
         .join(old_txt, "old_id")
-        .select(
-            "new_id",
-            "old_id",
-            F.round(
-                F.size(F.array_intersect(sh_a, sh_b)) / F.size(F.array_union(sh_a, sh_b)),
-                6,
-            ).alias("jaccard"),
-        )
+        .select("new_id", "old_id", F.round(jac, 6).alias("jaccard"))
         .filter(F.col("jaccard") >= 0.8)
         .dropDuplicates(["new_id", "old_id"])  # collapse multi-band collisions
     )

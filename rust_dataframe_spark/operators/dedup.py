@@ -19,6 +19,8 @@ linearly with corpus size:
 * **near_dup_pairs** — verify candidates with exact n-gram Jaccard via
   array_intersect/array_union on the (deduplicated) candidate pairs only —
   the classic candidate-then-verify shape that avoids the O(n^2) cross join.
+  Banding, the pair self-join, the verify payload join and the exact-dup
+  collapse are the shared pieces of operators/pairs.py.
 
 SimHash lives here too as a Pandas-UDF variant (vectorized Arrow batches) —
 the shape to use when the per-doc computation doesn't decompose into array
@@ -31,10 +33,12 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .cache import persist_tracked
 from .fixpoint import fixpoint
+from .pairs import band_hashes, collapse_exact, expand_groups, self_pairs, with_payload
 
 __all__ = [
     "exact_dedup",
     "shingle",
+    "shingle_jaccard",
     "minhash_signature",
     "minhash_signatures_df",
     "lsh_candidate_pairs",
@@ -87,6 +91,15 @@ def shingle(text_col, n: int = 3):
         F.sequence(F.lit(0), n_sh - 1),
         lambda i: F.array_join(F.slice(words, i + 1, n), " "),
     )
+
+
+def shingle_jaccard(a, b, n: int | None = 3):
+    """Exact Jaccard of two texts' distinct word ``n``-gram sets — the
+    verify score of every MinHash path.  With ``n=None``, ``a`` and ``b``
+    are already distinct shingle arrays."""
+    if n is not None:
+        a, b = (F.array_distinct(shingle(c, n)) for c in (a, b))
+    return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
 
 
 def minhash_signature(shingles_col, k: int = 16, *, hash_family: str = "md5"):
@@ -171,6 +184,20 @@ def minhash_signatures_df(
     )
 
 
+def _banded(sig_df: DataFrame, keep: list[str], sig_col: str, num_hashes: int, bands: int):
+    """One (*keep, band, bh) row per band per signature row."""
+    structs = F.array(
+        *[
+            F.struct(F.lit(b).alias("band"), h.alias("bh"))
+            for b, h in enumerate(band_hashes(F.col(sig_col), num_hashes, bands))
+        ]
+    )
+    keep_cols = [F.col(c) for c in keep]
+    return sig_df.select(*keep_cols, F.explode(structs).alias("b")).select(
+        *keep_cols, F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
+    )
+
+
 def lsh_candidate_pairs(
     sig_df: DataFrame, id_col: str, sig_col: str, *, bands: int, rows_per_band: int
 ) -> DataFrame:
@@ -179,39 +206,8 @@ def lsh_candidate_pairs(
     Explodes each doc into ``bands`` (band_idx, band_hash) rows, self-joins on
     the band key, dedups pairs.  Returns (id_a, id_b) with id_a < id_b.
     """
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|", F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band)
-                    )
-                ).alias("bh"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = (
-        sig_df.select(F.col(id_col), F.explode(band_structs).alias("b"))
-        .select(F.col(id_col), F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-    )
-    left = banded.select(
-        F.col(id_col).alias("id_a"), F.col("band"), F.col("bh")
-    )
-    right = banded.select(
-        F.col(id_col).alias("id_b"), F.col("band").alias("band_r"), F.col("bh").alias("bh_r")
-    )
-    return (
-        left.join(
-            right,
-            (left["band"] == right["band_r"])
-            & (left["bh"] == right["bh_r"])
-            & (left["id_a"] < right["id_b"]),
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    banded = _banded(sig_df, [id_col], sig_col, bands * rows_per_band, bands)
+    return self_pairs(banded, id_col, ["band", "bh"], distinct=True)
 
 
 def near_dup_pairs(
@@ -246,14 +242,8 @@ def near_dup_pairs(
     """
     from ..context import widen
 
-    rows_per_band = num_hashes // bands
-
-    # 1. collapse exact duplicates: one representative (min id) per distinct
-    # text, in a single groupBy on the digest.  first(text) is deterministic
-    # here — every row in a group carries the identical text.  Membership
-    # (__h, id) persists for the expansion joins; it holds digests+ids only.
-    h = widen(df).select(F.col(id_col), F.col(text_col), F.md5(F.col(text_col)).alias("__h"))
-    mem = persist_tracked(h.select("__h", F.col(id_col)))
+    # 1. collapse exact duplicates: one representative per distinct text
+    mem, rep_docs = collapse_exact(widen(df), id_col, text_col, F.md5(F.col(text_col)))
     # rep_docs fans into THREE consumers (the signature stage and both
     # sides of the verify join), and each reference would re-run the
     # corpus scan + md5 + full-text groupBy shuffle — persist so the
@@ -266,11 +256,7 @@ def near_dup_pairs(
     # re-run the very scans the persist exists to collapse; the spill
     # is disk-backed, per-query released, and bounded by the DISTINCT
     # corpus (duplicates are already collapsed here).
-    rep_docs = persist_tracked(
-        h.groupBy("__h").agg(
-            F.min(id_col).alias(id_col), F.first(text_col).alias(text_col)
-        )
-    )
+    rep_docs = persist_tracked(rep_docs)
 
     # 2. LSH over representatives.  No array_distinct before minhash: MinHash
     # is multiset-invariant (duplicate shingles can't change a min) and the
@@ -283,56 +269,24 @@ def near_dup_pairs(
             sh, id_col, "shingles", num_hashes, hash_family=hash_family
         )
     )
-    cands = lsh_candidate_pairs(sig, id_col, "sig", bands=bands, rows_per_band=rows_per_band)
+    banded = _banded(sig, [id_col], "sig", num_hashes, bands)
+    cands = self_pairs(banded, id_col, ["band", "bh"], distinct=True)
 
     # 3. verify candidates only: join texts, recompute shingles per pair —
     # O(distinct-text candidates), not O(corpus).  Each side carries its
-    # group digest through, so the expansion below needs no rep->digest join.
-    a = rep_docs.select(
-        F.col(id_col).alias("id_a"), F.col(text_col).alias("t_a"), F.col("__h").alias("__ha")
-    )
-    b = rep_docs.select(
-        F.col(id_col).alias("id_b"), F.col(text_col).alias("t_b"), F.col("__h").alias("__hb")
-    )
-    sh_a = F.array_distinct(shingle(F.col("t_a"), shingle_n))
-    sh_b = F.array_distinct(shingle(F.col("t_b"), shingle_n))
+    # group digest through, so the expansion needs no rep->digest join.
     rep_pairs = (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
+        with_payload(cands, rep_docs, id_col, {"t": F.col(text_col), "__h": F.col("__h")})
         .select(
-            "__ha",
-            "__hb",
-            F.round(
-                F.size(F.array_intersect(sh_a, sh_b)) / F.size(F.array_union(sh_a, sh_b)),
-                6,
-            ).alias("jaccard"),
+            "__h_a",
+            "__h_b",
+            F.round(shingle_jaccard(F.col("t_a"), F.col("t_b"), shingle_n), 6).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    rep_pairs = persist_tracked(rep_pairs)
-
-    # 4a. expand cross-group pairs: every member of a's group x every member
-    # of b's group; the pair's jaccard is the representatives' jaccard.
-    ma = mem.select(F.col("__h").alias("__ha"), F.col(id_col).alias("m_a"))
-    mb = mem.select(F.col("__h").alias("__hb"), F.col(id_col).alias("m_b"))
-    cross = (
-        rep_pairs.join(ma, "__ha")
-        .join(mb, "__hb")
-        .select(
-            F.least("m_a", "m_b").alias("id_a"),
-            F.greatest("m_a", "m_b").alias("id_b"),
-            F.col("jaccard"),
-        )
-    )
-
-    # 4b. within-group pairs: identical texts, jaccard exactly 1.0.
-    m1 = mem.select("__h", F.col(id_col).alias("id_a"))
-    m2 = mem.select(F.col("__h").alias("__h2"), F.col(id_col).alias("id_b"))
-    within = (
-        m1.join(m2, (m1["__h"] == m2["__h2"]) & (m1["id_a"] < m2["id_b"]))
-        .select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
-    )
-    return cross.unionByName(within)
+    # 4. expand through group membership: cross-group pairs inherit their
+    # representatives' jaccard, within-group pairs are exactly 1.0.
+    return expand_groups(mem, rep_pairs, id_col, "jaccard")
 
 
 def dup_clusters(
@@ -919,39 +873,10 @@ def lsh_band_index(
     downstream verify that may not be able to join back to the source —
     streaming probes).  Stateless narrow ops only, so the operator works
     unchanged on a streaming DataFrame."""
-    carry = list(carry_cols or [])
-    rows_per_band = num_hashes // bands
-    sh = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in carry],
-        shingle(F.col(text_col), shingle_n).alias("__sh"),
-    )
-    sig = sh.select(
-        F.col(id_col),
-        *[F.col(c) for c in carry],
-        minhash_signature(F.col("__sh"), num_hashes).alias("sig"),
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|", F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
-                    )
-                ).alias("bh"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return sig.select(
-        F.col(id_col), *[F.col(c) for c in carry], F.explode(band_structs).alias("b")
-    ).select(
-        F.col(id_col),
-        *[F.col(c) for c in carry],
-        F.col("b.band").alias("band"),
-        F.col("b.bh").alias("bh"),
-    )
+    keep = [id_col, *(carry_cols or [])]
+    sh = df.select(*keep, shingle(F.col(text_col), shingle_n).alias("__sh"))
+    sig = sh.select(*keep, minhash_signature(F.col("__sh"), num_hashes).alias("sig"))
+    return _banded(sig, keep, "sig", num_hashes, bands)
 
 
 def incremental_near_dups(
@@ -996,21 +921,13 @@ def incremental_near_dups(
         .select("new_id", "old_id")
         .distinct()
     )
-    a = new_df.select(F.col(id_col).alias("new_id"), F.col(text_col).alias("__ta"))
-    b = old_df.select(F.col(id_col).alias("old_id"), F.col(text_col).alias("__tb"))
-    sh_a = F.array_distinct(shingle(F.col("__ta"), shingle_n))
-    sh_b = F.array_distinct(shingle(F.col("__tb"), shingle_n))
+    jac = shingle_jaccard(F.col("t_a"), F.col("t_b"), shingle_n)
     return (
-        cands.join(a, "new_id")
-        .join(b, "old_id")
-        .select(
-            "new_id",
-            "old_id",
-            F.round(
-                F.size(F.array_intersect(sh_a, sh_b)) / F.size(F.array_union(sh_a, sh_b)),
-                6,
-            ).alias("jaccard"),
+        with_payload(
+            cands, new_df, id_col, {"t": F.col(text_col)},
+            other=old_df, keys=("new_id", "old_id"),
         )
+        .select("new_id", "old_id", F.round(jac, 6).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 

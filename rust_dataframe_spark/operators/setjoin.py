@@ -25,31 +25,58 @@ distributed ``global_row_number`` (repartitionByRange + per-partition
 window + O(partitions) offset prefix) — no single-partition funnel even at
 web-scale vocabularies (10^8+ tokens), plan-pinned in
 tests/test_plans.py::test_prefix_join_no_single_partition_window.
+
+The candidate self-join and the two-sided verify join are the shared
+candidates → verify pieces of operators/pairs.py; this module owns only
+the prefix bound and the exact scores.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .cache import persist_tracked
+from .pairs import self_pairs, with_payload
 from .training import global_row_number
 
 __all__ = ["prefix_jaccard_join", "prefix_containment_join"]
 
 
-def _ranked_docs(docs: DataFrame):
-    """(by_rank, prefix-ready) shared front half of the prefix-filter
-    joins: rare-first two-phase vocabulary rank, per-doc sorted rank
-    arrays.  Returns the ``(did, rks)`` frame."""
+def _ranked_docs(df: DataFrame, id_col: str, tokens_col: str, threshold: float):
+    """The shared front half of the prefix-filter joins.  Returns
+    ``(docs, by_rank, prefix)``: the ``(did, toks)`` input, its per-doc
+    sorted rare-first rank arrays ``(did, rks)``, and one ``(did, prk)``
+    row per rank in each doc's prefix of length ``|d| - ⌈t·|d|⌉ + 1``."""
+    if threshold <= 0:
+        # below any positive threshold the prefix invariant fails: pairs
+        # sharing no token qualify but can never meet on a prefix token
+        raise ValueError(f"prefix-filter joins need threshold > 0, got {threshold}")
+    docs = df.select(F.col(id_col).alias("did"), F.col(tokens_col).alias("toks"))
     tok = docs.select("did", F.explode("toks").alias("t"))
     vocab = tok.groupBy("t").agg(F.count(F.lit(1)).alias("cnt"))
     # deterministic rare-first total order over the vocabulary — two-phase
     # distributed rank, never a global single-partition window (VERDICT r3 #1)
     ranked = global_row_number(vocab, ["cnt", "t"], out_col="rk").select("t", "rk")
-    return (
+    by_rank = (
         tok.join(ranked, "t")
         .groupBy("did")
         .agg(F.sort_array(F.collect_list("rk")).alias("rks"))
     )
+    # the tiny epsilon keeps float error from ever SHORTENING the prefix
+    # (longer prefix = more candidates = still exact; shorter = false
+    # negatives).  The prefix frame is consumed by both sides of the
+    # candidate join: without a persist the whole rank pipeline (corpus
+    # explode + vocabulary rank + per-doc collect) executes once per side
+    sized = persist_tracked(
+        by_rank.withColumn("sz", F.size("rks")).withColumn(
+            "plen",
+            F.col("sz")
+            - F.ceil(F.lit(threshold) * F.col("sz") - F.lit(1e-9)).cast("int")
+            + F.lit(1),
+        )
+    )
+    prefix = sized.select("did", F.explode(F.slice("rks", 1, F.col("plen"))).alias("prk"))
+    return docs, by_rank, prefix
 
 
 def prefix_jaccard_join(
@@ -63,45 +90,14 @@ def prefix_jaccard_join(
     threshold`` — exact, via prefix-filtered candidate generation.
 
     ``tokens_col`` must be an array of distinct tokens per row.  Returns
-    ``(id_a, id_b, jaccard)``.
+    ``(id_a, id_b, jaccard)``.  Raises ``ValueError`` for ``threshold <= 0``.
     """
-    docs = df.select(F.col(id_col).alias("did"), F.col(tokens_col).alias("toks"))
-    by_rank = _ranked_docs(docs)
-    # prefix length |d| - ceil(t*|d|) + 1; the tiny epsilon keeps float
-    # error from ever SHORTENING the prefix (longer prefix = more
-    # candidates = still exact; shorter = false negatives)
-    from .cache import persist_tracked
-
-    # the prefix frame is consumed by both sides of the candidate join:
-    # without a persist the whole rank pipeline (corpus explode +
-    # vocabulary rank + per-doc collect) executes once per side
-    sized = persist_tracked(
-        by_rank.withColumn("sz", F.size("rks")).withColumn(
-            "plen",
-            F.col("sz")
-            - F.ceil(F.lit(threshold) * F.col("sz") - F.lit(1e-9)).cast("int")
-            + F.lit(1),
-        )
-    )
-    prefix = sized.select(
-        "did", F.explode(F.slice("rks", 1, F.col("plen"))).alias("prk")
-    )
-
-    cands = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), "prk")
-        .filter(F.col("a.did") < F.col("b.did"))
-        .select(F.col("a.did").alias("id_a"), F.col("b.did").alias("id_b"))
-        .distinct()
-    )
-
-    va = docs.select(F.col("did").alias("id_a"), F.col("toks").alias("ta"))
-    vb = docs.select(F.col("did").alias("id_b"), F.col("toks").alias("tb"))
-    inter = F.size(F.array_intersect("ta", "tb"))
-    union = F.size("ta") + F.size("tb") - inter
+    docs, _, prefix = _ranked_docs(df, id_col, tokens_col, threshold)
+    cands = self_pairs(prefix, "did", ["prk"], distinct=True)
+    inter = F.size(F.array_intersect("toks_a", "toks_b"))
+    union = F.size("toks_a") + F.size("toks_b") - inter
     return (
-        cands.join(va, "id_a")
-        .join(vb, "id_b")
+        with_payload(cands, docs, "did", {"toks": F.col("toks")})
         .withColumn("jaccard", inter / union)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
@@ -139,42 +135,22 @@ def prefix_containment_join(
     candidate join is shuffled on token rank with frequent-token skew —
     rare-first prefixes keep the A side selective, AQE splits the hot
     token lists.  Returns ``(id_a, id_b, containment)`` where A is the
-    (near-)contained side.
+    (near-)contained side.  Raises ``ValueError`` for ``threshold <= 0``.
     """
-    docs = df.select(F.col(id_col).alias("did"), F.col(tokens_col).alias("toks"))
-    by_rank = _ranked_docs(docs)
-    from .cache import persist_tracked
-
-    # the prefix frame is consumed by both sides of the candidate join:
-    # without a persist the whole rank pipeline (corpus explode +
-    # vocabulary rank + per-doc collect) executes once per side
-    sized = persist_tracked(
-        by_rank.withColumn("sz", F.size("rks")).withColumn(
-            "plen",
-            F.col("sz")
-            - F.ceil(F.lit(threshold) * F.col("sz") - F.lit(1e-9)).cast("int")
-            + F.lit(1),
-        )
-    )
-    prefix = sized.select(
-        F.col("did").alias("id_a"),
-        F.explode(F.slice("rks", 1, F.col("plen"))).alias("prk"),
-    )
+    docs, by_rank, prefix = _ranked_docs(df, id_col, tokens_col, threshold)
     inventory = by_rank.select(
         F.col("did").alias("id_b"), F.explode("rks").alias("prk")
     )
     cands = (
-        prefix.join(inventory, "prk")
+        prefix.select(F.col("did").alias("id_a"), "prk")
+        .join(inventory, "prk")
         .filter(F.col("id_a") != F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-    va = docs.select(F.col("did").alias("id_a"), F.col("toks").alias("ta"))
-    vb = docs.select(F.col("did").alias("id_b"), F.col("toks").alias("tb"))
-    cont = F.size(F.array_intersect("ta", "tb")) / F.size("ta")
+    cont = F.size(F.array_intersect("toks_a", "toks_b")) / F.size("toks_a")
     return (
-        cands.join(va, "id_a")
-        .join(vb, "id_b")
+        with_payload(cands, docs, "did", {"toks": F.col("toks")})
         .withColumn("containment", cont)
         .filter(F.col("containment") >= threshold)
         .select("id_a", "id_b", "containment")

@@ -23,8 +23,8 @@ import random
 
 from pyspark.sql import DataFrame, functions as F
 
-from .cache import persist_tracked
 from .fixpoint import fixpoint
+from .pairs import collapse_exact, expand_groups, self_pairs, with_payload
 
 __all__ = [
     "cosine",
@@ -34,6 +34,7 @@ __all__ = [
     "srp_candidates",
     "srp_multiprobe",
     "srp_near_dup",
+    "cosine_verify",
     "ivf_assign",
     "ivf_topk",
     "pq_split_codebooks",
@@ -144,65 +145,33 @@ def srp_near_dup(
     Scale: bucketing is a narrow map; the self-join shuffles (id, bucket)
     pairs; vectors travel only for candidate pairs (two hash joins on id).
     """
-    # Exact-dup collapse first (same load-bearing step as dedup.near_dup_pairs):
-    # identical vectors share a bucket by construction, so duplicate groups
-    # inflate candidate pairs by O(group^2).  Verify once per distinct vector
-    # pair, expand through membership after.  The digest is internal — any
-    # stable hash works; md5 of the joined components is deterministic.
+    # Exact-dup collapse first: identical vectors share a bucket by
+    # construction, so duplicate groups inflate candidate pairs by
+    # O(group^2).  The digest is internal — any stable hash works; md5 of
+    # the joined components is deterministic.
     digest = F.md5(F.array_join(F.transform(F.col(vec_col), lambda x: x.cast("string")), ","))
-    h = df.select(F.col(id_col), F.col(vec_col), digest.alias("__h"))
-    mem = persist_tracked(h.select("__h", F.col(id_col)))
-    # one groupBy yields both the representative id and its vector
-    # (first(vec) is deterministic — all vectors in a group are identical)
-    rep_vecs = h.groupBy("__h").agg(
-        F.min(id_col).alias(id_col), F.first(vec_col).alias(vec_col)
-    )
+    mem, rep_vecs = collapse_exact(df, id_col, vec_col, digest)
 
     buckets = srp_candidates(rep_vecs, id_col, vec_col, n_planes=n_planes, seed=seed)
-    a = buckets.select(F.col(id_col).alias("id_a"), "bucket")
-    b = buckets.select(F.col(id_col).alias("id_b"), F.col("bucket").alias("bucket_b"))
-    cands = a.join(
-        b, (a["bucket"] == b["bucket_b"]) & (a["id_a"] < b["id_b"])
-    ).select("id_a", "id_b")
-    va = rep_vecs.select(
-        F.col(id_col).alias("id_a"),
-        as_double(F.col(vec_col)).alias("emb_a"),
-        F.col("__h").alias("__ha"),
-    )
-    vb = rep_vecs.select(
-        F.col(id_col).alias("id_b"),
-        as_double(F.col(vec_col)).alias("emb_b"),
-        F.col("__h").alias("__hb"),
-    )
-    cos = cosine(F.col("emb_a"), F.col("emb_b"))
-    rep_pairs = (
-        cands.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("__ha", "__hb", cos.alias("raw"))
-        .filter(F.col("raw") >= threshold)
-        .select("__ha", "__hb", F.round("raw", 6).alias("cos_sim"))
-    )
-    rep_pairs = persist_tracked(rep_pairs)
-
-    ma = mem.select(F.col("__h").alias("__ha"), F.col(id_col).alias("m_a"))
-    mb = mem.select(F.col("__h").alias("__hb"), F.col(id_col).alias("m_b"))
-    cross = (
-        rep_pairs.join(ma, "__ha")
-        .join(mb, "__hb")
-        .select(
-            F.least("m_a", "m_b").alias("id_a"),
-            F.greatest("m_a", "m_b").alias("id_b"),
-            F.col("cos_sim"),
-        )
+    cands = self_pairs(buckets, id_col, ["bucket"], distinct=False)
+    payload = {"emb": as_double(F.col(vec_col)), "__h": F.col("__h")}
+    rep_pairs = cosine_verify(
+        with_payload(cands, rep_vecs, id_col, payload), ["__h_a", "__h_b"], threshold
     )
     # identical vectors: cosine rounds to exactly 1.0 (<=1-ulp off pre-round)
-    m1 = mem.select("__h", F.col(id_col).alias("id_a"))
-    m2 = mem.select(F.col("__h").alias("__h2"), F.col(id_col).alias("id_b"))
-    within = (
-        m1.join(m2, (m1["__h"] == m2["__h2"]) & (m1["id_a"] < m2["id_b"]))
-        .select("id_a", "id_b", F.lit(1.0).alias("cos_sim"))
+    return expand_groups(mem, rep_pairs, id_col, "cos_sim")
+
+
+def cosine_verify(pairs: DataFrame, keep: list[str], threshold: float) -> DataFrame:
+    """Exact-cosine verify of candidate pairs carrying ``emb_a``/``emb_b``
+    (``pairs.with_payload``): keeps ``keep`` plus ``cos_sim`` for pairs
+    with cosine >= threshold, filtered on the raw value, then rounded to
+    6dp."""
+    return (
+        pairs.select(*keep, cosine(F.col("emb_a"), F.col("emb_b")).alias("raw"))
+        .filter(F.col("raw") >= threshold)
+        .select(*keep, F.round("raw", 6).alias("cos_sim"))
     )
-    return cross.unionByName(within)
 
 
 def ivf_assign(df: DataFrame, id_col: str, vec_col: str, centroids: list[tuple[int, list[float]]]):
@@ -423,12 +392,21 @@ def pq_adc_topk(
     )
 
 
+def _probe_dim(df: DataFrame, vec_col: str) -> int | None:
+    """Vector length from the first row (the planes are sized by it), or
+    None for an empty frame."""
+    row = df.select(vec_col).first()
+    return None if row is None else len(row[0])
+
+
 def srp_candidates(
     df: DataFrame, id_col: str, vec_col: str, *, n_planes: int = 8, seed: int = 42
 ) -> DataFrame:
     """Bucket all vectors by SRP signature; vectors sharing a bucket are ANN
-    candidates.  Returns (id, bucket)."""
-    dim = len(df.select(vec_col).first()[0])
+    candidates.  Returns (id, bucket); empty input gives an empty frame."""
+    dim = _probe_dim(df, vec_col)
+    if dim is None:
+        return df.select(F.col(id_col), F.lit("").alias("bucket"))
     planes = srp_planes(dim, n_planes, seed)
     return df.select(
         F.col(id_col), srp_bucket(as_double(F.col(vec_col)), planes).alias("bucket")
@@ -463,7 +441,9 @@ def srp_multiprobe(
     """
     if not (0 <= n_probes < n_planes):
         raise ValueError(f"n_probes must be in [0, {n_planes}), got {n_probes}")
-    dim = len(df.select(vec_col).first()[0])
+    dim = _probe_dim(df, vec_col)
+    if dim is None:
+        return df.select(F.col(id_col), F.lit(0).alias("probe"), F.lit("").alias("bucket"))
     planes = srp_planes(dim, n_planes, seed)
     emb = as_double(F.col(vec_col))
     dots = [

@@ -7,7 +7,9 @@ guaranteed to fall in the same or an adjacent cell (3×3 neighborhood).  The
 join key becomes the cell id, the candidate set per point is bounded by
 local density (not n), and verification (exact distance) runs only on
 candidates — the same bucket-then-verify discipline as the LSH/SRP dedup
-family (operators/dedup.py, operators/similarity.py).
+family, whose shared pieces live in operators/pairs.py.  This join does
+not use them: it carries each point's coordinates through the candidate
+join, so verifying needs no payload join at all.
 
 Scale: one explode(×9) on the left side, one shuffle keyed by cell, exact
 distance check in whole-stage codegen.  Dense cells are data skew — AQE

@@ -205,7 +205,8 @@ def stream_near_dup_candidates(
 
     Composition: the signature stage is the exact batch expression pipeline
     (``operators/dedup.shingle`` + ``minhash_signature`` — same hash family,
-    codegen'd, elementwise, so it streams untouched); banding explodes each
+    codegen'd, elementwise, so it streams untouched); banding
+    (``operators/pairs.band_hashes``, the batch band keys) explodes each
     doc into ``bands`` bucket keys; the stateful hop keys on the bucket and
     keeps the id list seen per bucket, emitting (id_a, id_b) for every
     new-vs-seen co-occupant.
@@ -225,21 +226,14 @@ def stream_near_dup_candidates(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..operators.dedup import minhash_signature, shingle
+    from ..operators.pairs import band_hashes
 
-    rows_per_band = num_hashes // bands
+    hashes = band_hashes(F.col("sig"), num_hashes, bands)
     sig = docs.select(
         F.col(id_col),
         minhash_signature(shingle(F.col(text_col), shingle_n), num_hashes).alias("sig"),
     )
-    band_keys = F.array(
-        *[
-            F.concat(
-                F.lit(f"{b}#"),
-                F.md5(F.concat_ws("|", F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band))),
-            )
-            for b in range(bands)
-        ]
-    )
+    band_keys = F.array(*[F.concat(F.lit(f"{b}#"), h) for b, h in enumerate(hashes)])
     banded = sig.select(F.col(id_col), F.explode(band_keys).alias("bucket"))
 
     def update(key, pdf_iter, state):

@@ -106,6 +106,17 @@ def test_prefix_join_singleton_tokens(spark):
     assert [(r["id_a"], r["id_b"]) for r in rows] == [(1, 2)]
 
 
+@pytest.mark.parametrize("join", [prefix_jaccard_join, prefix_containment_join])
+@pytest.mark.parametrize("t", [0.0, -0.5])
+def test_prefix_joins_reject_nonpositive_threshold(spark, join, t):
+    # at t <= 0 the disjoint pairs (1,2) and (2,3) qualify but share no
+    # prefix token, so the prefix filter would silently drop them
+    docs = [(1, ["a", "b"]), (2, ["c", "d"]), (3, ["a", "b"])]
+    df = spark.createDataFrame(docs, "id long, toks array<string>")
+    with pytest.raises(ValueError, match="threshold > 0"):
+        join(df, "id", "toks", threshold=t)
+
+
 # ---------------------------------------------------------------------------
 # prefix_containment_join
 # ---------------------------------------------------------------------------

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from rust_dataframe_spark.operators import dedup as dd
 from rust_dataframe_spark.operators import multimodal as mm
+from rust_dataframe_spark.operators import pairs as pr
 from rust_dataframe_spark.operators import similarity as sim
 from rust_dataframe_spark.operators import text as tx
 
@@ -484,6 +485,108 @@ class TestMinhashLSH:
         sh = f.select(dd.shingle(F.col("text"), 3).alias("s")).first()["s"]
         assert sh == ["one two"]
 
+    # (4, 8): zero rows per band, every doc collides; (18, 4): two slots
+    # left out of every band; (16, 0) / (0, 4): no bands / no rows
+    @pytest.mark.parametrize("num_hashes,bands", [(4, 8), (18, 4), (16, 0), (0, 4)])
+    def test_banding_fails_loud(self, docs, num_hashes, bands):
+        kw = {"num_hashes": num_hashes, "bands": bands}
+        with pytest.raises(ValueError, match="num_hashes"):
+            dd.near_dup_pairs(docs, "doc_id", "text", **kw)
+        with pytest.raises(ValueError, match="num_hashes"):
+            dd.lsh_band_index(docs, "doc_id", "text", **kw)
+        with pytest.raises(ValueError, match="num_hashes"):
+            dd.incremental_near_dups(docs, docs, "doc_id", "text", **kw)
+
+    @pytest.mark.parametrize("bands,rows_per_band", [(4, 0), (0, 4), (-1, -4)])
+    def test_candidate_pairs_banding_fails_loud(self, docs, bands, rows_per_band):
+        sig = dd.minhash_signatures_df(
+            docs.select("doc_id", dd.shingle(F.col("text"), 3).alias("s")), "doc_id", "s", 16
+        )
+        with pytest.raises(ValueError, match="num_hashes"):
+            dd.lsh_candidate_pairs(sig, "doc_id", "sig", bands=bands, rows_per_band=rows_per_band)
+
+    def test_band_hashes_cover_every_slot(self):
+        assert len(pr.band_hashes(F.col("sig"), 16, 4)) == 4
+        assert len(pr.band_hashes(F.col("sig"), 16, 16)) == 16
+
+
+class TestCollapseFastPath:
+    """The exact-duplicate collapse (pairs.collapse_exact -> verify the
+    representatives -> pairs.expand_groups) must equal the path it
+    shortcuts: self_pairs -> verify over every row, no collapse.  Duplicate
+    groups of size 1, 2 and 3, plus near-dups of the grouped rows."""
+
+    @staticmethod
+    def _ids(id_type):
+        cast = str if id_type == "string" else int
+        return [cast(i) for i in (10, 3, 7, 4, 12, 1, 8, 5)]
+
+    @pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
+    def test_near_dup_pairs_equals_uncollapsed(self, spark, id_type):
+        base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+        other = "one two three four five six seven eight nine ten eleven twelve"
+        texts = [
+            base,  # group of 3
+            base,
+            base,
+            other,  # group of 2
+            other,
+            base + " nu",  # near-dup of the 3-group
+            other + " thirteen",  # near-dup of the 2-group
+            "completely unrelated words sharing no shingle with anything else",
+        ]
+        docs = spark.createDataFrame(
+            list(zip(self._ids(id_type), texts)), f"doc_id {id_type}, text string"
+        )
+        got = dd.near_dup_pairs(docs, "doc_id", "text", threshold=0.5)
+        cands = pr.self_pairs(
+            dd.lsh_band_index(docs, "doc_id", "text"), "doc_id", ["band", "bh"], distinct=True
+        )
+        jac = F.round(dd.shingle_jaccard(F.col("t_a"), F.col("t_b"), 3), 6)
+        ref = (
+            pr.with_payload(cands, docs, "doc_id", {"t": F.col("text")})
+            .select("id_a", "id_b", jac.alias("jaccard"))
+            .filter(F.col("jaccard") >= 0.5)
+        )
+        got_rows = sorted(tuple(r) for r in got.collect())
+        assert got_rows == sorted(tuple(r) for r in ref.collect())
+        scores = [r[2] for r in got_rows]
+        # the 3-group gives 3 within pairs, the 2-group 1; near-dups add more
+        assert scores.count(1.0) == 4 and any(j < 1.0 for j in scores)
+
+    @pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
+    @pytest.mark.parametrize("vec_type", ["float", "double"])
+    def test_srp_near_dup_equals_uncollapsed(self, spark, id_type, vec_type):
+        u = [1.0, 0.5, -0.25, 2.0, 0.0, -1.0, 0.75, 1.5]
+        v = [-0.5, 1.0, 1.25, -2.0, 0.5, 0.25, -0.75, 1.0]
+        vecs = [
+            u,  # group of 3
+            u,
+            u,
+            v,  # group of 2
+            v,
+            [x + 0.125 for x in u],  # near-dup of the 3-group
+            [x - 0.125 for x in v],  # near-dup of the 2-group
+            [0.0, -1.0, 0.0, 0.0, 2.0, 0.0, 0.0, -0.5],
+        ]
+        df = spark.createDataFrame(
+            list(zip(self._ids(id_type), vecs)), f"vec_id {id_type}, emb array<{vec_type}>"
+        )
+        got = sim.srp_near_dup(df, "vec_id", "emb", n_planes=3, seed=6, threshold=0.8)
+        cands = pr.self_pairs(
+            sim.srp_candidates(df, "vec_id", "emb", n_planes=3, seed=6),
+            "vec_id",
+            ["bucket"],
+            distinct=False,
+        )
+        emb = {"emb": sim.as_double(F.col("emb"))}
+        ref = sim.cosine_verify(pr.with_payload(cands, df, "vec_id", emb), ["id_a", "id_b"], 0.8)
+        got_rows = sorted(tuple(r) for r in got.collect())
+        assert got_rows == sorted(tuple(r) for r in ref.collect())
+        # 3 + 1 within-group pairs, and each near-dup pairs with its group
+        scores = [r[2] for r in got_rows]
+        assert len(scores) == 9 and scores.count(1.0) == 4
+
 
 class TestSimhash:
     def test_deterministic_and_close_for_near_dups(self, docs):
@@ -553,6 +656,15 @@ class TestSimilarity:
         assert len(out[0]) == 6
         # opposite vector flips every non-zero-dot bit
         assert out[2] != out[0]
+
+    def test_srp_empty_input_gives_empty_frames(self, spark):
+        df = spark.createDataFrame([], "vec_id bigint, embedding array<float>")
+        cands = sim.srp_candidates(df, "vec_id", "embedding", n_planes=4)
+        assert cands.columns == ["vec_id", "bucket"] and cands.count() == 0
+        probes = sim.srp_multiprobe(df, "vec_id", "embedding", n_planes=4, n_probes=1)
+        assert probes.columns == ["vec_id", "probe", "bucket"] and probes.count() == 0
+        out = sim.srp_near_dup(df, "vec_id", "embedding", n_planes=4)
+        assert out.columns == ["id_a", "id_b", "cos_sim"] and out.count() == 0
 
     def test_srp_planes_deterministic(self):
         assert sim.srp_planes(16, 4, seed=7) == sim.srp_planes(16, 4, seed=7)

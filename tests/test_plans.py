@@ -167,11 +167,24 @@ def test_q109_subqueries_decorrelate_to_joins(spark):
     assert "LeftSemi" in plan and "LeftAnti" in plan
 
 
-def test_q76_neardup_no_nested_loop_join(spark):
-    """q76 verifies SRP-bucket candidates with equi-joins only — the catalog
-    must contain no all-pairs BroadcastNestedLoopJoin plan (VERDICT r1 #1)."""
-    df = catalog.QUERIES["q76_embedding_neardup"](spark, SF)
-    plan = pi.physical_plan(df)
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q72_lsh_near_dup",
+        "q76_embedding_neardup",
+        "q89_srp_near_dup",
+        "q161_incremental_dedup",
+        "q209_srp_multiprobe",
+        "q249_prefix_setjoin",
+        "q318_containment_dedup",
+    ],
+)
+def test_similarity_joins_are_equi_joins(spark, name):
+    """Every candidates -> verify join (operators/pairs.py) generates
+    candidates on a key and verifies on the pair ids — equi-joins only, so
+    no all-pairs BroadcastNestedLoopJoin or CartesianProduct (VERDICT r1
+    #1)."""
+    plan = pi.physical_plan(catalog.QUERIES[name](spark, SF))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
@@ -512,16 +525,6 @@ def test_equidepth_no_window_no_global_sort(spark):
     plan = pi.physical_plan(df)
     assert "Window" not in plan
     assert "CartesianProduct" not in plan
-
-
-def test_prefix_setjoin_candidates_are_equi_joins(spark):
-    """q249: candidate generation and verification are equi-joins (prefix
-    token / pair ids) — the exact set-similarity join must never fall back
-    to a cartesian."""
-    df = catalog.QUERIES["q249_prefix_setjoin"](spark, SF)
-    plan = pi.physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_mad_outliers_broadcast_joinbacks(spark):
