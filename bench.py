@@ -1,18 +1,31 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness: times catalog queries at $SPARK_GRAFT_SF_DIR (default:
+the sf0.1 test data) on local[$SPARK_GRAFT_CPUS] and prints one JSON record.
 
-Methodology: each query runs twice and the SECOND (warm) run is reported —
-pass 1 pays one-off JVM JIT + whole-stage-codegen compilation + parquet
-footer reads, which on a long-lived cluster amortize to zero; pass 2 is the
-steady-state cost that actually scales with data volume.  Every run executes
-the full plan into a noop sink (no collect, no column pruning of the
-result), timings include Catalyst planning.
+    python bench.py [--reps N] [query_name ...]
+
+With no names it times the HEADLINE set, writes the full record to
+BENCH_SUMMARY.json and prints it shrunk to one line of at most 1900 bytes.
+With names it times those, in the given order, prints their full record and
+leaves BENCH_SUMMARY.json alone; run it once per SPARK_GRAFT_SF_DIR to
+measure a query across scale factors.  An unknown name exits before Spark
+starts.
+
+Methodology: a q31 warm-up, one untimed pass over the names (it pays JVM JIT,
+whole-stage codegen and parquet footer reads, which amortize to zero on a
+long-lived cluster), then ``--reps`` timed passes in the same order; each
+name reports its median over the timed passes.  Every run is perfbench's
+``run_query``: build (the catalog call, eager driver jobs included), exec
+(the returned plan written to a noop sink, so every column is evaluated and
+nothing is collected) and release (the query's persists dropped, outside the
+timed total), each under a Spark job group of its own.  ``queries`` holds
+build + exec seconds, ``census`` the per-phase seconds, jobs and stages, and
+``floor_ms`` the empty-job floor of the session.  A query that raises is
+listed in ``failed`` and the run exits 1.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -22,7 +35,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from rust_dataframe_spark import catalog
 from rust_dataframe_spark.context import get_spark
-from rust_dataframe_spark.operators.cache import release as cache_release
 
 # Headline set: the scan/agg/join/sort/window spine plus extension operators.
 # Kept in sync with catalog as operators land.
@@ -172,40 +184,6 @@ CORE = [
     "q485_delta_restore",
 ]
 
-# Lakehouse fixture queries spend most of their wall building a
-# protocol-real table INSIDE the query (writer half, driver-eager)
-# before the read path runs; the bench records build_s/read_s per
-# name so cross-round comparisons can track the read path (VERDICT
-# r10 #7).  build = the queries() call (fixture writes happen there,
-# eagerly), read = executing the returned lazy plan.
-FIXTURE_SPLIT = {
-    "q451_delta_log", "q452_iceberg_table", "q453_hudi_table",
-    "q455_iceberg_pos_deletes", "q456_hudi_mor_log",
-    "q458_delta_column_mapping", "q459_delta_deletion_vectors",
-    "q460_iceberg_eq_deletes", "q461_delta_checkpoint_formats",
-    "q462_iceberg_schema_evolution", "q463_delta_colmap_id_mode",
-    "q464_delta_change_data_feed", "q465_iceberg_incremental",
-    "q466_hudi_incremental",
-    "q467_delta_maintenance", "q468_iceberg_expiry",
-    "q469_iceberg_stats_pruning",
-    "q470_delta_data_skipping",
-    "q471_iceberg_name_mapping",
-    "q472_delta_drop_column",
-    "q473_hudi_mor_incremental",
-    "q474_delta_optimize_dv",
-    "q475_iceberg_transform_pruning",
-    "q476_iceberg_avro_files",
-    "q477_delta_cdf_stream",
-    "q478_iceberg_append_stream",
-    "q479_hudi_incr_stream",
-    "q480_delta_stream_sink",
-    "q481_hudi_clean",
-    "q482_iceberg_refs",
-    "q483_iceberg_orc_files",
-    "q484_iceberg_wap",
-    "q485_delta_restore",
-}
-
 ROTATION_POOL = [
     "q334_gif_frames",
     "q395_progressive_jpeg",
@@ -257,307 +235,195 @@ _rot = [ROTATION_POOL[(ROUND * 8 + i) % len(ROTATION_POOL)]
 HEADLINE = CORE + _rot
 
 
-def _is_descendant(pid: int, root: int) -> bool:
-    """True when ``root`` is ``pid`` or one of its procfs ancestors.  The
-    walk stops at pid 1, after 64 hops (cycle guard) or at the first
-    process that has exited."""
-    seen = 0
-    while pid > 1 and seen < 64:
-        if pid == root:
-            return True
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                pid = int(f.read().split(")")[-1].split()[1])
-        except (OSError, ValueError, IndexError):
-            return False
-        seen += 1
-    return False
+def _box_load() -> tuple[dict, int]:
+    """Box-load stamp and the number of foreign Spark JVMs, from one pair of
+    procfs scans 250 ms apart.
 
-
-def _box_load() -> dict:
-    """Self-describing box-load stamp (VERDICT r11 #8): 1/5/15-min
-    loadavg plus a census of BUSY foreign processes — ANY cmdline, not
-    just Spark JVMs.  The round-11 driver record carried a 10x outlier
-    cluster that cost a judge cycle to rebut: ``contended`` only counts
-    other Spark JVMs, so a non-JVM CPU hog (an orphaned fuzz child at
-    100%% CPU) was invisible.  With this stamp the next noisy record
-    self-describes.
-
-    Busy = a non-descendant process burning >50%% of one core over a
-    250 ms jiffy sample.  Best-effort: any procfs error contributes
-    nothing; the census is capped at 5 entries."""
-    out: dict = {"loadavg": None, "busy_procs": []}
-    try:
-        with open("/proc/loadavg") as f:
-            out["loadavg"] = [float(x) for x in f.read().split()[:3]]
-    except (OSError, ValueError):
-        pass
+    The stamp is the 1/5/15-min loadavg plus up to 5 busy foreign processes:
+    any command line burning more than half a core between the scans, so a
+    non-JVM CPU hog shows in the record too.  The count is of ``java``
+    processes with spark on the command line.  Foreign means not this
+    process nor a descendant of it: the bench's own driver JVM may be
+    started through a wrapper, so the ancestor chain is walked, not the
+    parent pid alone.  Best-effort: a procfs error contributes nothing."""
     me = os.getpid()
 
-    def _jiffies() -> dict[int, int]:
-        j: dict[int, int] = {}
+    def scan() -> dict[int, tuple[str, int, int]]:
+        procs = {}
         for p in os.listdir("/proc"):
             if not p.isdigit():
                 continue
             try:
                 with open(f"/proc/{p}/stat") as f:
-                    parts = f.read().split(")")[-1].split()
-                j[int(p)] = int(parts[11]) + int(parts[12])  # utime+stime
+                    comm, rest = f.read().rsplit(")", 1)
+                parts = rest.split()  # state ppid ... utime(11) stime(12)
+                procs[int(p)] = (comm.split("(", 1)[1], int(parts[1]),
+                                 int(parts[11]) + int(parts[12]))
             except (OSError, ValueError, IndexError):
                 continue
-        return j
+        return procs
 
+    def cmdline(pid: int) -> str:
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                return f.read().replace(b"\0", b" ").decode("utf-8", "replace").strip()
+        except OSError:
+            return "?"
+
+    stamp: dict = {"loadavg": None, "busy_procs": []}
     try:
-        clk = os.sysconf("SC_CLK_TCK") or 100
-        before = _jiffies()
-        time.sleep(0.25)
-        after = _jiffies()
-        busy = []
-        for pid, t1 in after.items():
-            t0 = before.get(pid)
-            if t0 is None or pid == me:
-                continue
-            frac = (t1 - t0) / (0.25 * clk)
-            if frac > 0.5 and not _is_descendant(pid, me):
-                try:
-                    with open(f"/proc/{pid}/cmdline", "rb") as f:
-                        cmd = (
-                            f.read().replace(b"\0", b" ").decode(
-                                "utf-8", "replace"
-                            ).strip()[:80]
-                        )
-                except OSError:
-                    cmd = "?"
-                busy.append(
-                    {"pid": pid, "cpu": round(frac, 2), "cmd": cmd}
-                )
-        busy.sort(key=lambda d: -d["cpu"])
-        out["busy_procs"] = busy[:5]
+        with open("/proc/loadavg") as f:
+            stamp["loadavg"] = [float(x) for x in f.read().split()[:3]]
     except (OSError, ValueError):
         pass
-    return out
-
-
-def _other_spark_jvms() -> int:
-    """Count Spark JVMs on this machine that do NOT belong to this bench
-    process (solo-guard, VERDICT r5 #7): two rounds running, the driver's
-    single-pass bench recorded 1.5-2x spikes on queries whose clean-room
-    medians improved — contention from the audit suite sharing the box.
-    Recording the contention state INTO the JSON makes a noisy record
-    self-describing instead of a silent outlier.
-
-    Implementation: procfs scan for java processes with spark on the
-    command line that are not DESCENDANTS of this process (round-6 ADVICE:
-    the bench's own driver JVM may be launched through a non-exec
-    spark-submit wrapper or an intermediate shell, so a direct-child ppid
-    check would count our own JVM and stamp contended=true on clean solo
-    runs — walk each candidate's ancestor chain up to pid 1 instead).
-    Best-effort — any procfs error counts zero."""
-    me = os.getpid()
-    n = 0
     try:
-        for pid in os.listdir("/proc"):
-            if not pid.isdigit() or int(pid) == me:
-                continue
-            try:
-                with open(f"/proc/{pid}/cmdline", "rb") as f:
-                    cmd = f.read().replace(b"\0", b" ")
-                if b"java" not in cmd or b"spark" not in cmd.lower():
-                    continue
-                if not _is_descendant(int(pid), me):
-                    n += 1
-            except OSError:
-                continue
+        before = scan()
+        time.sleep(0.25)
+        after = scan()
     except OSError:
-        pass
-    return n
+        return stamp, 0
+
+    def foreign(pid: int) -> bool:
+        for _ in range(64):  # cycle guard
+            if pid == me:
+                return False
+            if pid <= 1 or pid not in after:
+                return True
+            pid = after[pid][1]
+        return True
+
+    clk = os.sysconf("SC_CLK_TCK") or 100
+    busy, jvms = [], 0
+    for pid, (comm, _, t1) in after.items():
+        if not foreign(pid):
+            continue
+        if comm == "java" and "spark" in cmdline(pid).lower():
+            jvms += 1
+        frac = (t1 - before[pid][2]) / (0.25 * clk) if pid in before else 0.0
+        if frac > 0.5:
+            busy.append({"pid": pid, "cpu": round(frac, 2), "cmd": cmdline(pid)[:80]})
+    busy.sort(key=lambda d: -d["cpu"])
+    stamp["busy_procs"] = busy[:5]
+    return stamp, jvms
 
 
-def main() -> None:
-    reps = 1
-    if "--reps" in sys.argv:
-        i = sys.argv.index("--reps")
-        if i + 1 >= len(sys.argv):
-            raise SystemExit("usage: --reps <int>")
-        try:
-            reps = int(sys.argv[i + 1])
-        except ValueError:
-            raise SystemExit(f"usage: --reps <int> (got {sys.argv[i+1]!r})") from None
+def _printed_line(out: dict, budget: int = 1900) -> str:
+    """``out`` as one JSON line of at most ``budget`` bytes: the census goes,
+    the load stamp shrinks to loadavg and busy-process counts, and the
+    fastest queries leave ``queries`` until it fits, for readers that keep
+    only about 2000 bytes of stdout; the full record is in
+    BENCH_SUMMARY.json, which the line names.  Slowest-first keeps the
+    printed subset stable round over round."""
+    line = json.dumps(out, separators=(",", ":"))
+    if len(line) <= budget:
+        return line
+    timings = out["queries"]
+    pruned = {k: v for k, v in out.items() if k != "census"}
+    pruned["box_load"] = {
+        k: {"loadavg": v["loadavg"], "busy_n": len(v["busy_procs"])}
+        for k, v in out["box_load"].items()
+    }
+    pruned["detail"] = "BENCH_SUMMARY.json"
+    keep = dict.fromkeys(sorted(timings, key=lambda n: -timings[n]))
+    line = json.dumps(pruned, separators=(",", ":"))
+    while len(line) > budget and keep:
+        keep.popitem()  # drop the fastest query still kept
+        pruned["queries"] = {n: timings[n] for n in keep}
+        pruned["queries_omitted"] = len(timings) - len(keep)
+        line = json.dumps(pruned, separators=(",", ":"))
+    return line
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description="Time catalog queries; see bench.py's docstring.")
+    ap.add_argument("names", nargs="*", help="queries to time (default: HEADLINE)")
+    ap.add_argument("--reps", type=int, default=1, help="timed passes (default 1)")
+    args = ap.parse_args(argv)
+    names = args.names or HEADLINE
+    unknown = [n for n in names if n not in catalog.QUERIES]
+    if unknown:
+        ap.error(f"unknown queries: {unknown}")
+    from perfbench.run import NoSpans, floor_ms, per_query, run_query
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    jvms_before = _other_spark_jvms()
-    load_before = _box_load()
+    load_before, jvms_before = _box_load()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm the JVM + parquet footers once with the cheapest query
     catalog.QUERIES["q31_topk"](spark, sf_dir).collect()
+    floor = floor_ms(spark)
+    runs: dict[str, list[dict]] = {n: [] for n in names}
+    failed: list[str] = []
+    # pass 0 is the untimed warm-up; --reps N (clean-room mode, VERDICT r4
+    # #1) reports per-name medians, robust to a one-off hiccup in any pass
+    for n_pass in range(args.reps + 1):
+        for name in names:
+            rec = run_query(spark, name, f"bench/{n_pass}/{name}", sf_dir, NoSpans(), None)
+            if rec is None:
+                failed.append(name)
+            elif n_pass:
+                runs[name].append(rec)
 
-    def run_once(name: str) -> tuple[float, float, float]:
-        t0 = time.time()
-        df = catalog.QUERIES[name](spark, sf_dir)
-        t1 = time.time()
-        # noop sink evaluates every output column without collecting to the
-        # driver (df.count() would let Catalyst prune computed columns)
-        df.write.format("noop").mode("overwrite").save()
-        t2 = time.time()
-        # measurement-bug fix (round 12, guide §1): operator-internal
-        # persists used to accumulate ACROSS queries within a pass (only
-        # cleared between passes), so late-position queries paid block-
-        # manager/GC pressure for every predecessor's leftovers — q396
-        # measured 9.2 s at bench position ~90 vs 2.5 s solo, and the
-        # inflation reproduced at partial strength in a 6-query replay.
-        # Nothing is shared between queries (each rebuilds from parquet;
-        # leftover blocks can only hurt), so each query now releases its
-        # own tracked persists AFTER its timed window.  Release cost is
-        # excluded from the timing on purpose: it is inter-query hygiene,
-        # not query work.  clearCache additionally drops the few
-        # untracked iterative-loop persists (e.g. dup_clusters' adjacency).
-        cache_release(blocking=True)
-        spark.catalog.clearCache()
-        return t2 - t0, t1 - t0, t2 - t1
-
-    names = [n for n in HEADLINE if n in catalog.QUERIES]
-    for name in names:  # pass 1: JIT/codegen/footer warm-up (untimed)
-        run_once(name)
-    spark.catalog.clearCache()  # drop operator-internal persists between passes
-    # --reps N (clean-room mode, VERDICT r4 #1): N timed steady-state passes,
-    # report the per-query MEDIAN — robust to a one-off container hiccup in
-    # any single pass.  Default 1 keeps the driver's recorded protocol
-    # byte-identical.
-    passes = []
-    for _ in range(reps):
-        passes.append({name: run_once(name) for name in names})
-        spark.catalog.clearCache()
-
-    def med(name: str, k: int) -> float:
-        return round(
-            sorted(p[name][k] for p in passes)[len(passes) // 2], 3
-        )
-
-    timings = {name: med(name, 0) for name in names}
-    fixture_split = {
-        name: {"build_s": med(name, 1), "read_s": med(name, 2)}
-        for name in names if name in FIXTURE_SPLIT
-    }
-    total = round(sum(timings.values()), 3)
+    q = per_query(runs)
+    timings = {n: round(r["total_s"], 3) for n, r in q.items()}
     out = {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         # the stable comparable core (BASELINE.md policy): totals over
         # CORE survive both set growth and codec rotation
-        "core_total": round(
-            sum(t for n, t in timings.items() if n in set(CORE)), 3
-        ),
+        "core_total": round(sum(t for n, t in timings.items() if n in set(CORE)), 3),
         "rotation": _rot,
-        # VERDICT r12 #5: BENCH_SUMMARY.json is overwritten by whatever
-        # run happened last on the box (incl. low-cpu scaling runs);
-        # stamping the core count makes a human-read comparable_total
-        # self-explanatory.  The driver ignores it.
+        # the requested core count (VERDICT r12 #5) and the parallelism
+        # the session actually ran with
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
-        # the parallelism the session actually ran with, so the record
-        # certifies its core count whatever the env var said
         "default_parallelism": spark.sparkContext.defaultParallelism,
-        # lakehouse fixture queries: build (fixture writes) vs read
-        # (executing the returned plan) so the read path is the
-        # comparable signal (VERDICT r10 #7)
-        "fixture_split": fixture_split,
+        "floor_ms": round(floor, 3),
+        "census": {
+            n: {k: round(v, 3) if k.endswith("_s") else v
+                for k, v in r.items() if k != "total_s"}
+            for n, r in q.items()
+        },
     }
-    if reps > 1:
-        out["reps"] = reps
-    # VERDICT r8 #8: with the headline set at 100+ queries and growing,
-    # cross-round totals stop being comparable as names are added.  Record
-    # the total restricted to the PREVIOUS record's name set (prefer the
-    # committed BENCH_SUMMARY.json — it carries the full set; fall back to
-    # the latest driver BENCH_r{N}.json, which may be pruned) so the
-    # round-over-round signal survives set growth without archaeology.
-    prev_names: set[str] = set()
-    here = os.path.dirname(os.path.abspath(__file__))
+    if args.reps > 1:
+        out["reps"] = args.reps
+    if failed:
+        out["failed"] = list(dict.fromkeys(failed))
+    # VERDICT r8 #8: the total over the previous record's names, so the
+    # round-over-round signal survives growth of the headline set
+    summary = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_SUMMARY.json")
     try:
-        with open(os.path.join(here, "BENCH_SUMMARY.json")) as f:
+        with open(summary) as f:
             prev_names = set(json.load(f).get("queries") or {})
-    except Exception:
+    except (OSError, ValueError):
         prev_names = set()
-    if not prev_names:
-        try:
-            import glob as _glob
-
-            recs = sorted(_glob.glob(os.path.join(here, "BENCH_r[0-9]*.json")))
-            if recs:
-                with open(recs[-1]) as f:
-                    rec = json.load(f)
-                parsed = rec.get("parsed") or rec
-                prev_names = set(parsed.get("queries") or {})
-        except Exception:
-            prev_names = set()
     common = [n for n in timings if n in prev_names]
     if common:
         out["comparable_total"] = round(sum(timings[n] for n in common), 3)
         out["comparable_n"] = len(common)
-    jvms_after = _other_spark_jvms()
+    # solo guard (VERDICT r5 #7, r11 #8): contention from foreign Spark
+    # JVMs or any busy process, at the start and the end of the run
+    load_after, jvms_after = _box_load()
     out["other_spark_jvms"] = max(jvms_before, jvms_after)
     out["contended"] = out["other_spark_jvms"] > 0
-    # VERDICT r11 #8: the stamp that makes non-JVM contention
-    # self-evident — loadavg + busy-foreign-process census at start
-    # and end of the run (BASELINE.md documents interpretation).
-    out["box_load"] = {"start": load_before, "end": _box_load()}
+    out["box_load"] = {"start": load_before, "end": load_after}
 
-    # VERDICT r6 #6: the driver's stdout capture window is ~2000 bytes and
-    # BENCH_r05/r06 both landed with parsed=null because the one JSON line
-    # outgrew it.  Two defenses: (a) the FULL record always goes to a
-    # compact summary file the judge can read directly; (b) the printed
-    # line is shrunk deterministically — if the full dict exceeds the
-    # budget, the FASTEST queries are moved out of the inline "queries"
-    # dict (the slow ones are the perf signal) and the line stamps how
-    # many were omitted plus the file that has them all.
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_SUMMARY.json"), "w") as f:
-            json.dump(out, f, separators=(",", ":"))
-    except OSError:
-        pass  # read-only checkout: the printed line is still authoritative
-    budget = 1900
-    line = json.dumps(out, separators=(",", ":"))
-    if len(line) > budget:
-        # VERDICT r12 #3: the printed subset is now STABLE — always the
-        # slowest-N by current timings.  The old r7 rotation (retain
-        # queries missing from the previous driver record first) made
-        # consecutive printed subsets DISJOINT, which starved the
-        # driver's per-query round-over-round and scaling comparisons
-        # (PERF_r12 n_common=0, empty scaling block).  The rotation
-        # predates BENCH_SUMMARY.json; the full census is always
-        # written there, so rotation is redundant — and slow-first is
-        # both the perf signal and round-over-round stable (the slow
-        # set barely changes between rounds).
-        slow_first = sorted(timings, key=lambda n: -timings[n])
-        pruned = dict(out)
-        # the split detail lives in BENCH_SUMMARY.json; the printed
-        # line keeps the per-query totals (the comparable signal)
-        pruned.pop("fixture_split", None)
-        # compress the load stamp: loadavg triplets + busy-proc count
-        # (full census with cmdlines stays in BENCH_SUMMARY.json)
-        bl = out.get("box_load") or {}
-        pruned["box_load"] = {
-            k: {
-                "loadavg": (bl.get(k) or {}).get("loadavg"),
-                "busy_n": len((bl.get(k) or {}).get("busy_procs") or []),
-            }
-            for k in ("start", "end")
-        }
-        pruned["detail"] = "BENCH_SUMMARY.json"
-        line = json.dumps(pruned, separators=(",", ":"))
-        keep = dict.fromkeys(slow_first)
-        while len(line) > budget and keep:
-            keep.popitem()  # drop the current fastest retained query
-            pruned["queries"] = {n: timings[n] for n in keep}
-            pruned["queries_omitted"] = len(timings) - len(keep)
-            pruned["detail"] = "BENCH_SUMMARY.json"
-            line = json.dumps(pruned, separators=(",", ":"))
-    print(line)
+    if args.names:
+        print(json.dumps(out, separators=(",", ":")))
+    else:
+        if not failed:  # a run with a failure must not pass as a smaller total
+            try:
+                with open(summary, "w") as f:
+                    json.dump(out, f, separators=(",", ":"))
+            except OSError:
+                pass  # read-only checkout: the printed line is still authoritative
+        print(_printed_line(out))
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

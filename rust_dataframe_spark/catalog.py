@@ -34,14 +34,34 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
+def _ts_is_nanos(path: str) -> bool:
+    """True when the parquet ``ts`` column at ``path`` (a file or a directory
+    of files) is TIMESTAMP(NANOS), read from a footer without a Spark job.  A
+    path pyarrow cannot open counts as nanos, so Spark can still read it."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    try:
+        t = ds.dataset(path, format="parquet").schema.field("ts").type
+    except (OSError, KeyError, ValueError, pa.ArrowException):
+        return True
+    return pa.types.is_timestamp(t) and t.unit == "ns"
+
+
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-adaptive events loader.  Testdata generations have stored ``ts``
     as TIMESTAMP(NANOS) (which Spark's parquet reader rejects — read nanos as
     long via the legacy conf and rebuild), as TIMESTAMP(MICROS) without UTC
     adjustment (read as TIMESTAMP_NTZ), or as plain TIMESTAMP.  Normalize all
     three to a session-tz (UTC) TimestampType column so every downstream query
-    sees identical wall-clock values regardless of the physical encoding."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    sees identical wall-clock values regardless of the physical encoding.
+
+    Only a nanos file turns ``spark.sql.legacy.parquet.nanosAsLong`` on, and
+    then the conf stays on: the parquet reader reads it again when the
+    returned plan executes, so restoring it here would break that plan.  Any
+    other file leaves the session conf as it was."""
+    if _ts_is_nanos(f"{sf_dir}/events.parquet"):
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     e = table(spark, sf_dir, "events")
     ts_type = dict(e.dtypes)["ts"]
     if ts_type == "bigint":  # legacy nanos-as-long

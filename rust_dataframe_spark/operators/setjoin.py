@@ -44,9 +44,10 @@ __all__ = ["prefix_jaccard_join", "prefix_containment_join"]
 
 def _ranked_docs(df: DataFrame, id_col: str, tokens_col: str, threshold: float):
     """The shared front half of the prefix-filter joins.  Returns
-    ``(docs, by_rank, prefix)``: the ``(did, toks)`` input, its per-doc
-    sorted rare-first rank arrays ``(did, rks)``, and one ``(did, prk)``
-    row per rank in each doc's prefix of length ``|d| - ⌈t·|d|⌉ + 1``."""
+    ``(docs, ranks, prefix)``: the ``(did, toks)`` input, its persisted
+    per-doc sorted rare-first rank arrays ``(did, rks, ...)``, and one
+    ``(did, prk)`` row per rank in each doc's prefix of length
+    ``|d| - ⌈t·|d|⌉ + 1``."""
     if threshold <= 0:
         # below any positive threshold the prefix invariant fails: pairs
         # sharing no token qualify but can never meet on a prefix token
@@ -65,8 +66,9 @@ def _ranked_docs(df: DataFrame, id_col: str, tokens_col: str, threshold: float):
     # the tiny epsilon keeps float error from ever SHORTENING the prefix
     # (longer prefix = more candidates = still exact; shorter = false
     # negatives).  The prefix frame is consumed by both sides of the
-    # candidate join: without a persist the whole rank pipeline (corpus
-    # explode + vocabulary rank + per-doc collect) executes once per side
+    # candidate join (and the containment join's inventory): without a
+    # persist the whole rank pipeline (corpus explode + vocabulary rank +
+    # per-doc collect) executes once per reader
     sized = persist_tracked(
         by_rank.withColumn("sz", F.size("rks")).withColumn(
             "plen",
@@ -76,7 +78,7 @@ def _ranked_docs(df: DataFrame, id_col: str, tokens_col: str, threshold: float):
         )
     )
     prefix = sized.select("did", F.explode(F.slice("rks", 1, F.col("plen"))).alias("prk"))
-    return docs, by_rank, prefix
+    return docs, sized, prefix
 
 
 def prefix_jaccard_join(
@@ -137,8 +139,8 @@ def prefix_containment_join(
     token lists.  Returns ``(id_a, id_b, containment)`` where A is the
     (near-)contained side.  Raises ``ValueError`` for ``threshold <= 0``.
     """
-    docs, by_rank, prefix = _ranked_docs(df, id_col, tokens_col, threshold)
-    inventory = by_rank.select(
+    docs, ranks, prefix = _ranked_docs(df, id_col, tokens_col, threshold)
+    inventory = ranks.select(
         F.col("did").alias("id_b"), F.explode("rks").alias("prk")
     )
     cands = (

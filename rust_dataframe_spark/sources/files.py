@@ -137,18 +137,6 @@ def read_parquet(spark: SparkSession, path: str, **options) -> DataFrame:
     return df
 
 
-def read_orc(spark: SparkSession, path: str, **options) -> DataFrame:
-    """ORC source — same columnar/pushdown posture as parquet (PushedFilters
-    and column pruning reach the ORC scan; plan-tested).  Completes the
-    format matrix alongside csv/json/parquet/arrow-ipc/text/binaryFile;
-    avro needs the external spark-avro jar (absent here, documented)."""
-    return spark.read.options(**options).orc(path)
-
-
-def write_orc(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
-
-
 def read_text(spark: SparkSession, path: str, *, wholetext: bool = False) -> DataFrame:
     """Line-per-row text source (one ``value: string`` column) — the raw-crawl
     ingestion path; parse structure out with split/regexp/from_json

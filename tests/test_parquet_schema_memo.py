@@ -186,6 +186,30 @@ def test_nanos_conf_flip_through_load_events(spark, tmp_path):
         spark.conf.set(NANOS_CONF, old)
 
 
+def test_load_events_over_micros_leaves_conf(spark, tmp_path):
+    """A TIMESTAMP(MICROS) ``ts`` needs no legacy conf: ``load_events``
+    leaves ``nanosAsLong`` at whatever the session had, under both values."""
+    sf = str(tmp_path)
+    ts = [datetime(2024, 1, 1, h, 0, 0, 123456) for h in range(3)]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+        }),
+        f"{sf}/events.parquet",
+    )
+    old = spark.conf.get(NANOS_CONF)
+    try:
+        for value in ("false", "true"):
+            spark.conf.set(NANOS_CONF, value)
+            ev = catalog.load_events(spark, sf)
+            assert spark.conf.get(NANOS_CONF) == value
+            assert dict(ev.dtypes)["ts"] == "timestamp"
+            assert sorted(r["ts"] for r in ev.collect()) == ts
+    finally:
+        spark.conf.set(NANOS_CONF, old)
+
+
 def test_self_join_of_two_reads_resolves(spark, sf_dir):
     """The q7 shape: two ``table("nation")`` reads joined on differing
     columns.  Shared attribute ids would make the join condition trivially

@@ -573,6 +573,21 @@ def test_q318_containment_no_single_partition_window(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_q318_inventory_reads_the_persisted_ranks(spark):
+    """Both sides of the containment candidate join read the persisted rank
+    frame: outside the cached subplans no ``collect_list`` aggregate is left,
+    so the per-doc rank pipeline runs once."""
+    plan = pi.physical_plan(catalog.QUERIES["q318_containment_dedup"](spark, SF))
+    outside, cached_at = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cached_at is not None and depth > cached_at:
+            continue
+        cached_at = depth if "InMemoryRelation" in line else None
+        outside.append(line)
+    assert not [ln for ln in outside if "collect_list" in ln]
+
+
 def test_q321_sorted_neighborhood_no_single_partition_window(spark):
     """The global blocking-key order must be the two-phase rank, never a
     naive Window.orderBy over the corpus."""

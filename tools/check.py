@@ -14,6 +14,9 @@ Set ``CHECK_JSON_OUT=/path.json`` to also write a machine-readable record
 (same shape as the driver's CORRECTNESS files) — committed per round as
 CORRECTNESS_local_r*.json so the full catalog stays auditable beyond the
 driver's 50-query cap.
+Each DuckDB oracle query runs under ``ORACLE_MEMORY_LIMIT`` and is interrupted
+after ``ORACLE_TIMEOUT_S``; an interrupted query is recorded as a ``timeout``
+failure, never as a PASS.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
 
 sys.path.insert(0, "/root/repo")
@@ -33,6 +37,14 @@ TABLES = [
 ]
 
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
+
+#: DuckDB's memory cap: fits beside the 8g Spark driver on a 15 GB box, so
+#: a runaway oracle fails with an out-of-memory error instead of starving
+#: the Spark JVM.
+ORACLE_MEMORY_LIMIT = "4GB"
+#: Seconds one oracle query may run before ``con.interrupt()`` stops it;
+#: such a query is recorded as a ``timeout`` failure.
+ORACLE_TIMEOUT_S = 300
 
 
 def canon_cell(v):
@@ -65,6 +77,20 @@ def canon_rows(cols, rows):
     return out
 
 
+def run_oracle(con, sql):
+    """``(columns, rows)`` of ``sql``, or None when it ran past
+    ``ORACLE_TIMEOUT_S`` and was interrupted."""
+    timer = threading.Timer(ORACLE_TIMEOUT_S, con.interrupt)
+    timer.start()
+    try:
+        res = con.execute(sql)
+        return [d[0] for d in res.description], res.fetchall()
+    except duckdb.InterruptException:
+        return None
+    finally:
+        timer.cancel()
+
+
 def main(argv):
     import __spark_entry__ as entry_mod
     from rust_dataframe_spark.context import get_spark
@@ -73,7 +99,7 @@ def main(argv):
 
     mode = scale_mode()
     spark = get_spark("correctness-check")
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": ORACLE_MEMORY_LIMIT})
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
@@ -158,14 +184,19 @@ def main(argv):
             n_weak += 1
             continue
         try:
-            res = con.execute(oracles[name])
-            dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
+            oracle = run_oracle(con, oracles[name])
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {e}")
             record[name] = {"status": "fail", "err": f"duckdb: {e}"}
             n_fail += 1
             continue
+        if oracle is None:
+            print(f"FAIL {name}: oracle timeout after {ORACLE_TIMEOUT_S}s")
+            record[name] = {"status": "timeout",
+                            "err": f"duckdb: interrupted after {ORACLE_TIMEOUT_S}s"}
+            n_fail += 1
+            continue
+        dcols, drows = oracle
         problems = []
         if len(srows) != len(drows):
             problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
