@@ -426,4 +426,11 @@ def main(argv: list[str] | None = None) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    rc = main()
+    # the CLI owns its session: stop the driver JVM before exit, so a run
+    # started right after this one finds no dying Spark JVM on the box
+    # (in-process callers of main() share their session and keep it)
+    from perfbench.run import stop_jvm
+
+    stop_jvm(get_spark("bench"))
+    sys.exit(rc)

@@ -287,14 +287,17 @@ def q248_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q249_prefix_setjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact set-similarity self-join at Jaccard ≥ 0.95 via prefix
     filtering (operators/setjoin.prefix_jaccard_join — AllPairs/PPJoin):
-    tokens ordered rarest-first, only the ``|d| - ⌈t|d|⌉ + 1`` rarest per
-    doc generate candidates, every qualifying pair provably survives —
-    the guaranteed-recall counterpart to MinHash-LSH (q72), at the cost
-    of an exact-verify join instead of banding.  The oracle brute-forces
-    all pairs (fine at 300 docs); equality certifies zero false
-    negatives.  Scale: candidates shuffle on prefix tokens (rare by
-    construction), verification is codegen'd array_intersect on
-    candidates only, and the vocabulary rank table is vocab-bounded."""
+    each doc orders its tokens by ``(count, token)``, rarest first, only
+    the first ``|d| - ⌈t|d|⌉ + 1`` generate candidates, and the size
+    filter ``t|a| ≤ |b| ≤ |a|/t`` drops pairs before the verify; every
+    qualifying pair provably survives — the guaranteed-recall
+    counterpart to MinHash-LSH (q72), at the cost of an exact-verify
+    join instead of banding.  The oracle brute-forces all pairs (fine at
+    300 docs); equality certifies zero false negatives.  Scale: the
+    catalog call runs no Spark job (no global rank); candidates shuffle
+    on prefix tokens (rare by construction), verification is codegen'd
+    array_intersect on candidates only, and the token-count table is
+    vocab-bounded."""
     from .operators.setjoin import prefix_jaccard_join
 
     d = (

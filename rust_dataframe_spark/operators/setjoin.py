@@ -7,28 +7,33 @@ negatives.  This module is the exact counterpart: **prefix filtering**
 finds every pair with Jaccard ≥ t, guaranteed, without the all-pairs
 cross product.
 
-The invariant: order each record's tokens by ascending global frequency
-(rarest first) and keep only the first ``|d| - ⌈t·|d|⌉ + 1`` as its
-*prefix*.  Two records with Jaccard ≥ t MUST share at least one prefix
-token — so the equi-join on prefix tokens is a complete candidate
-generator, and exact verification runs on candidates only.  Rare-first
-ordering makes prefixes collide rarely (the rarest token of a record is
-shared by few others), which is what keeps candidate counts near the
-output size.
+The invariant: order each record's tokens by one global total order and
+keep only the first ``|d| - ⌈t·|d|⌉ + 1`` as its *prefix*.  Two records
+with Jaccard ≥ t MUST share at least one prefix token — so the equi-join
+on prefix tokens is a complete candidate generator, and exact
+verification runs on candidates only.  The order is ``(count, token)``:
+rarest first by the token's corpus document frequency, ties broken by
+the token itself.  Rare-first ordering makes prefixes collide rarely (the
+rarest token of a record is shared by few others), which keeps candidate
+counts near the output size.  Each doc sorts its own ``(count, token)``
+structs, so no global rank, window or range shuffle is needed.
 
-Scale shape: token-frequency table (vocab-bounded) built once and joined
-back; candidate generation is one equi-join shuffled on the prefix token
+The **size filter** (AllPairs) prunes candidates before the verify: a
+pair can only reach Jaccard ≥ t if ``t·|a| ≤ |b| ≤ |a|/t``, and a
+containment ``|A∩B|/|A| ≥ t`` needs ``|B| ≥ t·|A|``.  Both bounds use
+the prefix length's ``⌈t·|d|⌉``, with the same epsilon, inside the
+candidate join.
+
+Null tokens are no tokens: they are dropped before counting, so the
+prefix, the sizes the size filter compares and the verify's sets all
+hold the non-null tokens only.
+
+Scale shape: the token-count table is vocab-bounded and joined back once;
+candidate generation is one equi-join shuffled on the prefix token
 (skewed common tokens appear in few prefixes *because* of rare-first
 ordering; AQE splits the stragglers); verification is codegen'd
-array_intersect on candidate pairs.  The vocabulary rank is the two-phase
-distributed ``global_row_number`` (repartitionByRange + per-partition
-window + O(partitions) offset prefix) — no single-partition funnel even at
-web-scale vocabularies (10^8+ tokens), plan-pinned in
-tests/test_plans.py::test_prefix_join_no_single_partition_window.
-
-The candidate self-join and the two-sided verify join are the shared
-candidates → verify pieces of operators/pairs.py; this module owns only
-the prefix bound and the exact scores.
+array_intersect on candidate pairs, whose payload comes from the
+persisted per-doc frame through operators/pairs.with_payload.
 """
 
 from __future__ import annotations
@@ -36,49 +41,58 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .cache import persist_tracked
-from .pairs import self_pairs, with_payload
-from .training import global_row_number
+from .pairs import with_payload
 
 __all__ = ["prefix_jaccard_join", "prefix_containment_join"]
 
 
-def _ranked_docs(df: DataFrame, id_col: str, tokens_col: str, threshold: float):
-    """The shared front half of the prefix-filter joins.  Returns
-    ``(docs, ranks, prefix)``: the ``(did, toks)`` input, its persisted
-    per-doc sorted rare-first rank arrays ``(did, rks, ...)``, and one
-    ``(did, prk)`` row per rank in each doc's prefix of length
-    ``|d| - ⌈t·|d|⌉ + 1``."""
+def _candidates(
+    df: DataFrame, id_col: str, tokens_col: str, threshold: float, *, containment: bool
+) -> DataFrame:
+    """The shared front half of the prefix-filter joins: the distinct
+    candidate pairs ``(id_a, id_b)`` with both docs' non-null tokens as
+    ``toks_a``/``toks_b``.  A's prefix tokens meet B's prefix (Jaccard) or
+    all of B's tokens (``containment``), under the size filter."""
     if threshold <= 0:
         # below any positive threshold the prefix invariant fails: pairs
         # sharing no token qualify but can never meet on a prefix token
         raise ValueError(f"prefix-filter joins need threshold > 0, got {threshold}")
-    docs = df.select(F.col(id_col).alias("did"), F.col(tokens_col).alias("toks"))
-    tok = docs.select("did", F.explode("toks").alias("t"))
+    tok = df.select(F.col(id_col).alias("did"), F.explode(F.array_compact(tokens_col)).alias("t"))
     vocab = tok.groupBy("t").agg(F.count(F.lit(1)).alias("cnt"))
-    # deterministic rare-first total order over the vocabulary — two-phase
-    # distributed rank, never a global single-partition window (VERDICT r3 #1)
-    ranked = global_row_number(vocab, ["cnt", "t"], out_col="rk").select("t", "rk")
-    by_rank = (
-        tok.join(ranked, "t")
+    ordered = (
+        tok.join(vocab, "t")
         .groupBy("did")
-        .agg(F.sort_array(F.collect_list("rk")).alias("rks"))
+        .agg(F.sort_array(F.collect_list(F.struct("cnt", "t"))).alias("ct"))
     )
-    # the tiny epsilon keeps float error from ever SHORTENING the prefix
-    # (longer prefix = more candidates = still exact; shorter = false
-    # negatives).  The prefix frame is consumed by both sides of the
-    # candidate join (and the containment join's inventory): without a
-    # persist the whole rank pipeline (corpus explode + vocabulary rank +
-    # per-doc collect) executes once per reader
-    sized = persist_tracked(
-        by_rank.withColumn("sz", F.size("rks")).withColumn(
-            "plen",
-            F.col("sz")
-            - F.ceil(F.lit(threshold) * F.col("sz") - F.lit(1e-9)).cast("int")
-            + F.lit(1),
+    # lo = ⌈t·sz⌉, the least overlap (and partner size) a qualifying pair
+    # needs.  The tiny epsilon keeps float error from ever RAISING lo: a
+    # longer prefix and a looser size bound only add candidates, a shorter
+    # one drops pairs.  Both candidate-join sides and both payloads read
+    # this frame: without a persist the corpus explode, token count and
+    # per-doc sort would run once per reader
+    ranks = persist_tracked(
+        ordered.select("did", F.col("ct.t").alias("toks"), F.size("ct").alias("sz")).withColumn(
+            "lo", F.ceil(F.lit(threshold) * F.col("sz") - F.lit(1e-9)).cast("int")
         )
     )
-    prefix = sized.select("did", F.explode(F.slice("rks", 1, F.col("plen"))).alias("prk"))
-    return docs, sized, prefix
+    prefix = F.slice("toks", 1, F.col("sz") - F.col("lo") + 1)
+    a, b = (
+        ranks.select(
+            F.col("did").alias(f"id_{s}"),
+            F.explode(keys).alias("t"),
+            F.col("sz").alias(f"sz_{s}"),
+            F.col("lo").alias(f"lo_{s}"),
+        )
+        for s, keys in (("a", prefix), ("b", F.col("toks") if containment else prefix))
+    )
+    # B must hold the overlap; a Jaccard pair needs that both ways
+    keep = (F.col("sz_b") >= F.col("lo_a")) & (
+        (F.col("id_a") != F.col("id_b"))
+        if containment
+        else (F.col("id_a") < F.col("id_b")) & (F.col("sz_a") >= F.col("lo_b"))
+    )
+    cands = a.join(b, "t").filter(keep).select("id_a", "id_b").distinct()
+    return with_payload(cands, ranks, "did", {"toks": F.col("toks")})
 
 
 def prefix_jaccard_join(
@@ -89,17 +103,17 @@ def prefix_jaccard_join(
     threshold: float,
 ) -> DataFrame:
     """All pairs (id_a < id_b) with ``Jaccard(tokens_a, tokens_b) ≥
-    threshold`` — exact, via prefix-filtered candidate generation.
+    threshold`` — exact, via prefix-filtered candidate generation with the
+    size filter ``t·|a| ≤ |b| ≤ |a|/t``.
 
-    ``tokens_col`` must be an array of distinct tokens per row.  Returns
-    ``(id_a, id_b, jaccard)``.  Raises ``ValueError`` for ``threshold <= 0``.
+    ``tokens_col`` must be an array of distinct tokens per row; null
+    tokens are ignored (see the module docstring).  Returns ``(id_a, id_b,
+    jaccard)``.  Raises ``ValueError`` for ``threshold <= 0``.
     """
-    docs, _, prefix = _ranked_docs(df, id_col, tokens_col, threshold)
-    cands = self_pairs(prefix, "did", ["prk"], distinct=True)
     inter = F.size(F.array_intersect("toks_a", "toks_b"))
     union = F.size("toks_a") + F.size("toks_b") - inter
     return (
-        with_payload(cands, docs, "did", {"toks": F.col("toks")})
+        _candidates(df, id_col, tokens_col, threshold, containment=False)
         .withColumn("jaccard", inter / union)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
@@ -125,34 +139,23 @@ def prefix_containment_join(
     Jaccard, not containment).
 
     Prefix invariant (PRETTI/PIEJoin family): if ``|A∩B| ≥ t·|A|`` then
-    ``|A\\B| ≤ |A|·(1-t)``, so A's rare-first prefix of length
-    ``|A| - ⌈t·|A|⌉ + 1`` (one more than A can afford to miss) must contain
-    at least one token of B.  Candidates therefore come from joining A's
-    PREFIX tokens against B's FULL token inventory — complete by
-    construction; verification computes exact containment on candidates
-    only.
+    ``|A\\B| ≤ |A|·(1-t)``, so A's prefix of length ``|A| - ⌈t·|A|⌉ + 1``
+    (one more than A can afford to miss) must contain at least one token
+    of B.  Candidates therefore come from joining A's PREFIX tokens
+    against B's FULL token inventory — complete by construction — under
+    the size bound ``|B| ≥ ⌈t·|A|⌉`` (B must hold the overlap);
+    verification computes exact containment on candidates only.
 
-    Scale shape: same two-phase vocabulary rank as the Jaccard join (no
-    single-partition window); the B side is a full inverted index, so the
-    candidate join is shuffled on token rank with frequent-token skew —
-    rare-first prefixes keep the A side selective, AQE splits the hot
-    token lists.  Returns ``(id_a, id_b, containment)`` where A is the
+    Scale shape: the same per-doc ``(count, token)`` order as the Jaccard
+    join; the B side is a full inverted index, so the candidate join is
+    shuffled on the token with frequent-token skew — rare-first prefixes
+    keep the A side selective, AQE splits the hot token lists.  Null tokens
+    are ignored.  Returns ``(id_a, id_b, containment)`` where A is the
     (near-)contained side.  Raises ``ValueError`` for ``threshold <= 0``.
     """
-    docs, ranks, prefix = _ranked_docs(df, id_col, tokens_col, threshold)
-    inventory = ranks.select(
-        F.col("did").alias("id_b"), F.explode("rks").alias("prk")
-    )
-    cands = (
-        prefix.select(F.col("did").alias("id_a"), "prk")
-        .join(inventory, "prk")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
     cont = F.size(F.array_intersect("toks_a", "toks_b")) / F.size("toks_a")
     return (
-        with_payload(cands, docs, "did", {"toks": F.col("toks")})
+        _candidates(df, id_col, tokens_col, threshold, containment=True)
         .withColumn("containment", cont)
         .filter(F.col("containment") >= threshold)
         .select("id_a", "id_b", "containment")

@@ -19,6 +19,7 @@ whole-stage codegen via F.transform/F.zip_with/F.aggregate.
 
 from __future__ import annotations
 
+import math
 import random
 
 from pyspark.sql import DataFrame, functions as F
@@ -60,6 +61,22 @@ def _norm(a):
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, v: s + v))
 
 
+def _vec_sql(xs) -> str:
+    """A driver vector as one Spark SQL ``array<double>`` literal, so it
+    ships in one ``F.expr`` instead of a ``F.lit`` call per value.  Finite
+    values render as ``repr(x)`` + ``D``, which parses back to the same
+    double (``-0.0`` and subnormals included); NaN and the infinities are
+    string casts."""
+
+    def one(x: float) -> str:
+        x = float(x)
+        if math.isfinite(x):
+            return f"{x!r}D"
+        return f"CAST('{'NaN' if x != x else 'Infinity' if x > 0 else '-Infinity'}' AS DOUBLE)"
+
+    return f"array({', '.join(map(one, xs))})"
+
+
 def as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
@@ -77,8 +94,7 @@ def cosine_topk(
     Plans as scan -> codegen'd math -> TakeOrderedAndProject(k): no shuffle of
     vectors, only k rows reach the driver side of the sort.
     """
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = cosine(as_double(F.col(vec_col)), q)
+    sim = cosine(as_double(F.col(vec_col)), F.expr(_vec_sql(query_vec)))
     return (
         df.select(F.col(id_col), F.round(sim, 6).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col(id_col))
@@ -116,9 +132,7 @@ def srp_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
 def srp_bucket(vec_col, planes: list[list[float]]):
     """b-bit bucket string: '1' where dot(vec, plane_i) >= 0 else '0'."""
     bits = [
-        F.when(_dot(vec_col, F.array(*[F.lit(c) for c in plane])) >= 0, F.lit("1")).otherwise(
-            F.lit("0")
-        )
+        F.when(_dot(vec_col, F.expr(_vec_sql(plane))) >= 0, F.lit("1")).otherwise(F.lit("0"))
         for plane in planes
     ]
     return F.concat(*bits)
@@ -180,29 +194,28 @@ def ivf_assign(df: DataFrame, id_col: str, vec_col: str, centroids: list[tuple[i
 
     Centroids ship as literals (they're tiny — broadcast for free); the argmax
     is the greatest-of-structs trick (sim, then lower centroid id on ties), so
-    assignment is one codegen'd map over the scan — no shuffle, no UDF.  At
-    scale the centroid set comes from a sampled k-means (pyspark.ml KMeans);
-    here it is injectable so tests and the SQL oracle can replay a
-    deterministic quantizer.
+    assignment is one codegen'd map over the scan — no shuffle, no UDF.  The
+    whole argmax is ONE ``F.expr`` (one py4j call, however many centroids),
+    its vectors rendered exactly by :func:`_vec_sql`.  At scale the centroid
+    set comes from a sampled k-means (pyspark.ml KMeans); here it is
+    injectable so tests and the SQL oracle can replay a deterministic
+    quantizer.
     """
-    import math
-
-    emb = as_double(F.col(vec_col))
+    vec = f"`{vec_col.replace('`', '``')}`"
+    emb = f"transform({vec}, x -> CAST(x AS DOUBLE))"
     # argmax_c cosine(v, c) == argmax_c dot(v, c/||c||): ||v|| is constant
     # across centroids, and centroid norms fold into the literals driver-side.
     # One dot product per centroid per row instead of dot + two norms + sqrt.
     structs = []
     for cid, cv in centroids:
         nrm = math.sqrt(sum(x * x for x in cv))
-        cvn = [x / nrm for x in cv]
+        cvn = _vec_sql(x / nrm for x in cv)
         structs.append(
-            F.struct(
-                _dot(emb, F.array(*[F.lit(x) for x in cvn])).alias("sim"),
-                F.lit(-cid).alias("negid"),
-            )
+            f"named_struct('sim', aggregate(zip_with({emb}, {cvn}, (x, y) -> x * y), 0D, "
+            f"(s, v) -> s + v), 'negid', {-int(cid)})"
         )
-    best = F.greatest(*structs)
-    return df.select(F.col(id_col), (-best["negid"]).alias("cell"), F.col(vec_col))
+    best = structs[0] if len(structs) == 1 else f"greatest({', '.join(structs)})"
+    return df.select(F.col(id_col), F.expr(f"-({best}).negid AS cell"), F.col(vec))
 
 
 def ivf_topk(
@@ -229,16 +242,13 @@ def ivf_topk(
         return sum(x * y for x, y in zip(a, b))
 
     def _pycos(a, b):
-        import math
-
         return _pydot(a, b) / (math.sqrt(_pydot(a, a)) * math.sqrt(_pydot(b, b)))
 
     ranked = sorted(centroids, key=lambda c: (-_pycos(c[1], query_vec), c[0]))
     probe = [cid for cid, _ in ranked[:nprobe]]
     assigned = ivf_assign(df, id_col, vec_col, centroids)
     hits = assigned.filter(F.col("cell").isin(probe))
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = cosine(as_double(F.col(vec_col)), q)
+    sim = cosine(as_double(F.col(vec_col)), F.expr(_vec_sql(query_vec)))
     return (
         hits.select(F.col(id_col), F.col("cell"), F.round(sim, 6).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col(id_col))
@@ -274,9 +284,8 @@ def _l2sq(a, b_lit: list[float]):
     # sequentially.  The same op sequence is replayable bit-for-bit by any
     # engine with list primitives (DuckDB: list_zip + list_transform +
     # list_reduce with a 0.0 prepend) — no reliance on reduction order.
-    bl = F.array(*[F.lit(float(x)) for x in b_lit])
     return F.aggregate(
-        F.zip_with(a, bl, lambda x, y: (x - y) * (x - y)),
+        F.zip_with(a, F.expr(_vec_sql(b_lit)), lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
         lambda s, v: s + v,
     )
@@ -316,9 +325,7 @@ def pq_encode(
         # (lowest cid) is identical to the struct-least formulation.  The
         # per-codeword distance is the same left fold as _l2sq.
         cb = sorted(codebooks[j])
-        cwlits = F.array(
-            *[F.array(*[F.lit(float(x)) for x in cw]) for _, cw in cb]
-        )
+        cwlits = F.expr(f"array({', '.join(_vec_sql(cw) for _, cw in cb)})")
         dists = F.transform(
             cwlits,
             lambda cw: F.aggregate(
@@ -382,7 +389,7 @@ def pq_adc_topk(
     # left-to-right sum over subspaces (fixed float order, engine-replayable)
     adc = F.lit(0.0)
     for j in range(m):
-        table_j = F.array(*[F.lit(d) for d in dtables[j]])
+        table_j = F.expr(_vec_sql(dtables[j]))
         adc = adc + F.element_at(table_j, F.element_at(F.col("codes"), j + 1) + 1)
     extra = [F.col(c) for c in (keep_cols or [])]
     return (
@@ -446,9 +453,7 @@ def srp_multiprobe(
         return df.select(F.col(id_col), F.lit(0).alias("probe"), F.lit("").alias("bucket"))
     planes = srp_planes(dim, n_planes, seed)
     emb = as_double(F.col(vec_col))
-    dots = [
-        _dot(emb, F.array(*[F.lit(c) for c in plane])) for plane in planes
-    ]
+    dots = [_dot(emb, F.expr(_vec_sql(plane))) for plane in planes]
     bits = [
         F.when(d >= 0, F.lit("1")).otherwise(F.lit("0")) for d in dots
     ]
@@ -799,7 +804,7 @@ def jl_project(
     v = as_double(F.col(vec_col))
     scale = float(out_dim) ** 0.5
     comps = [
-        (_dot(v, F.array(*[F.lit(c) for c in row])) / F.lit(scale)).alias(f"j{j}")
+        (_dot(v, F.expr(_vec_sql(row))) / F.lit(scale)).alias(f"j{j}")
         for j, row in enumerate(signs)
     ]
     return df.withColumn(out_col, F.array(*comps))

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .similarity import _dot, as_double, cosine, ivf_assign
+from .similarity import _dot, _vec_sql, as_double, cosine, ivf_assign
 
 __all__ = [
     "stratified_sample",
@@ -335,7 +335,7 @@ def _angular_cost(vec_col, centers: list[list[float]]):
     sims = []
     for cv in centers:
         nrm = math.sqrt(sum(x * x for x in cv)) or 1.0
-        sims.append(_dot(emb, F.array(*[F.lit(x / nrm) for x in cv])) / vnorm)
+        sims.append(_dot(emb, F.expr(_vec_sql(x / nrm for x in cv))) / vnorm)
     best = sims[0] if len(sims) == 1 else F.greatest(*sims)
     return F.greatest(F.lit(0.0), F.lit(1.0) - best)
 

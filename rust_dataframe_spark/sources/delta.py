@@ -713,6 +713,11 @@ def read_delta(
     column-mapping physical->logical renames ('name' mode) or
     field-id resolution ('id' mode).
 
+    Every scan is typed from the log: metaData.schemaString is the
+    table's authoritative schema, so no read runs a Spark job to infer
+    one from a data file's footer, and a column absent from some files
+    reads null in them instead of depending on which footer was read.
+
     ``where``: a SQL predicate applied to the result AND used for
     DATA SKIPPING — add actions whose per-file stats
     (minValues/maxValues, PROTOCOL.md) or partitionValues prove no
@@ -780,20 +785,21 @@ def read_delta(
             [(ids[f.name], f.name, f.dataType)
              for f in struct.fields],
         )
-    elif mapping:
-        # 'name' mode: project EXACTLY the mapped physical columns
-        # through an explicit schema — a physical column present in
-        # old files but absent from the mapping (a DROPPED column)
-        # is never read, and a mapped column absent from old files
-        # (ADDED later) reads null; protocol Column Projection.
-        l2p = {v: k for k, v in mapping.items()}
-        phys_schema = StructType([
-            StructField(l2p[f.name], f.dataType, True)
-            for f in struct.fields
-        ])
-        df = spark.read.schema(phys_schema).parquet(*files)
     else:
-        df = spark.read.parquet(*files)
+        # an explicit schema, so no footer-inference job runs.  'name'
+        # mode projects EXACTLY the mapped physical columns: a physical
+        # column present in old files but absent from the mapping (a
+        # DROPPED column) is never read, and a mapped column absent from
+        # old files (ADDED later) reads null; protocol Column Projection.
+        # Without mapping the schema is metaData.schemaString, the
+        # table's own, minus the hive-laid-out partition columns (absent
+        # from files, re-injected below).
+        l2p = {v: k for k, v in (mapping or {}).items()}
+        df = spark.read.schema(StructType([
+            StructField(l2p.get(f.name, f.name), f.dataType, True)
+            for f in struct.fields
+            if mapping or f.name not in part_cols
+        ])).parquet(*files)
     need_key = bool(part_cols) or bool(dvs)
     if need_key:
         # the DV anti-join below keys on basename without passing
